@@ -2,18 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Production session factory: one place for the config posture described
-  * in SCALE.md, so every entry point (Verify, Bench, a user's driver)
-  * starts from the same tuned baseline instead of re-deriving it.
+/** Session factory: one place for the config posture described in
+  * SCALE.md, so every entry point (Verify, Bench, the athenaeum CLI, a
+  * user's driver) starts from the same tuned baseline instead of
+  * re-deriving it. It is also the test posture: the specs' shared
+  * session is built here too, adding only deployment settings (UI off,
+  * a temp warehouse), so tests prove the configuration the product ships.
   *
   * Everything here is a default — callers can still override any key on
-  * the returned builder before `getOrCreate()`.
+  * the returned builder before `getOrCreate()`. Session-wide settings
+  * belong here, set once at build time; a query never changes its
+  * session's conf or planner hooks.
   */
 object GraftSession {
 
-  /** @param cores parallelism for local mode; on a cluster pass 0 and set
-    *              master/resources externally (spark-submit) — the SQL
-    *              knobs still apply. */
   /** Dedup.releaseAll unpersists localCheckpoint blocks ON PURPOSE (the
     * caches are dead between queries); Spark's "RDD was locally
     * checkpointed, its lineage has been truncated" WARN is the expected
@@ -26,12 +28,18 @@ object GraftSession {
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
 
+  /** @param cores parallelism for local mode; on a cluster pass 0 and set
+    *              master/resources externally (spark-submit) — the SQL
+    *              knobs still apply. */
   def builder(appName: String = "graft", cores: Int = 0)
       : SparkSession.Builder = {
     val b = SparkSession.builder()
       .appName(appName)
       // deterministic timestamp semantics (oracle parity + sane pipelines)
       .config("spark.sql.session.timeZone", "UTC")
+      // INT64 TIMESTAMP(NANOS) parquet columns read as BIGINT epoch-nanos
+      // instead of failing the scan (see sources.Tables)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // AQE: runtime re-planning, skew-join split, partition coalescing
       .config("spark.sql.adaptive.enabled", "true")
       // probe-side pruning for selective dim joins (see ScaleJoinsSpec)
@@ -47,7 +55,8 @@ object GraftSession {
       // therefore pinned PER JOIN with explicit hints at the call
       // sites that provably benefit (the gates already hint
       // `shuffle_hash` on their increment sides), not session-wide.
-      // graft_* SQL functions available in every session
+      // graft_* SQL functions, optimizer rules and planner strategy: the
+      // only install path (see GraftExtensions)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // codegen COMPILED-CLASS cache (static conf, JVM-wide): the
       // default 100 entries thrashes under a 368-query bench — every

@@ -242,7 +242,6 @@ object SparkEntry {
     // join that BucketedRangeJoinRule rewrites to the bucketed equi join
     // automatically (plan-asserted in RangeJoinSpec)
     "q_range_join_auto" -> ((s, dir) => {
-      graft.operators.RangeJoin.enableAuto(s)
       val liHist = t(s, dir, "lineitem")
         .groupBy(col("l_quantity")).agg(count(lit(1)).as("cnt_l"))
       val partHist = t(s, dir, "part")
@@ -257,7 +256,6 @@ object SparkEntry {
     // [size - 1, size + 3] — auto-rewritten to the same bucketed equi
     // join (RangeJoinSpec pins the no-BNLJ plan)
     "q_range_join_band" -> ((s, dir) => {
-      graft.operators.RangeJoin.enableAuto(s)
       val liHist = t(s, dir, "lineitem")
         .groupBy(col("l_quantity")).agg(count(lit(1)).as("cnt_l"))
       val partHist = t(s, dir, "part")
@@ -273,7 +271,6 @@ object SparkEntry {
     // bucketed by floor(v/w) with the interval side exploded to its
     // covered buckets
     "q_range_join_interval" -> ((s, dir) => {
-      graft.operators.RangeJoin.enableAuto(s)
       val liHist = t(s, dir, "lineitem")
         .groupBy(col("l_quantity")).agg(count(lit(1)).as("cnt_l"))
       val iv = t(s, dir, "part")
@@ -3033,7 +3030,6 @@ object SparkEntry {
     // shape (PlanHygieneSpec proves no single-partition window stage
     // survives), and the DuckDB oracle runs the IDENTICAL SQL -----
     "q_sql_global_rank" -> ((s, dir) => {
-      graft.plans.GlobalWindowRule.enableAuto(s)
       t(s, dir, "orders").createOrReplaceTempView("orders_gwr")
       s.sql(
         """SELECT o_orderkey,
@@ -3070,7 +3066,6 @@ object SparkEntry {
     // deterministic). Revenue sums ride DECIMAL for exact association;
     // the DuckDB oracle runs the IDENTICAL SQL -----
     "q_sql_running" -> ((s, dir) => {
-      graft.plans.GlobalWindowRule.enableAuto(s)
       t(s, dir, "orders").createOrReplaceTempView("orders_gwr2")
       s.sql(
         """SELECT o_orderkey,
@@ -3088,7 +3083,6 @@ object SparkEntry {
     // it as a 1-row scalar aggregation broadcast-crossed back — the
     // optimized plan contains NO Window operator at all -----
     "q_sql_share" -> ((s, dir) => {
-      graft.plans.GlobalWindowRule.enableAuto(s)
       t(s, dir, "orders").createOrReplaceTempView("orders_gwr3")
       s.sql(
         """SELECT o_orderkey,

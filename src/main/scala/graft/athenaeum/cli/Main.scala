@@ -1,12 +1,13 @@
 package graft.athenaeum.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.athenaeum._
 
 /** CLI parity with `database.py main` (`database.py:27-45`): one JSON-AST
   * file argument (optional trailing `-d` debug flag accepted and
   * ignored), table files resolved against the CWD, errors to stderr with
-  * exit 1 (`write_error`, `database.py:147-152`).
+  * exit 1 (`write_error`, `database.py:147-152`). The session is the
+  * [[graft.GraftSession]] posture over all local cores; `SPARK_MASTER`
+  * overrides the master for a deployment.
   */
 object Main {
   def main(args0: Array[String]): Unit = {
@@ -27,11 +28,11 @@ object Main {
         die(s"""Input file "${args.head}" is not valid.""")
         null
       }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", "32")
+    val builder = graft.GraftSession
+      .builder("athenaeum", Runtime.getRuntime.availableProcessors())
       .config("spark.ui.enabled", "false")
-      .appName("athenaeum").getOrCreate()
+    sys.env.get("SPARK_MASTER").foreach(builder.master)
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try print(Engine.run(spark, sys.props("user.dir"), ast))
     catch { case EngineError(msg) => die(msg) }

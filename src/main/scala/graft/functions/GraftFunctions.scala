@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
@@ -8,12 +8,11 @@ import graft.functions.expressions._
 
 /** Column API + SQL registration for the native graft expressions.
   *
-  * Two wiring paths, both supported:
   *  - Library/Column use: `GraftFunctions.minhashSig(col, 12)` — builds
   *    the Catalyst expression directly, no session config needed.
-  *  - SQL use: `GraftFunctions.register(spark)` (idempotent) or
-  *    `spark.sql.extensions=graft.functions.GraftExtensions`, then
-  *    `SELECT graft_simhash(shingles) …`.
+  *  - SQL use: a session built with
+  *    `spark.sql.extensions=graft.functions.GraftExtensions` (the
+  *    [[graft.GraftSession]] default), then `SELECT graft_simhash(shingles) …`.
   */
 object GraftFunctions {
 
@@ -109,23 +108,13 @@ object GraftFunctions {
     "graft_nfc" -> (args => NfcNormalize(args.head)),
     "graft_hilbert" -> (args => HilbertKey(args.head, args(1),
       args(2).asInstanceOf[Literal].value.asInstanceOf[Number].intValue)))
-
-  /** Register the SQL functions on an existing session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    fns.foreach { case (name, builder) =>
-      registry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", name),
-        builder)
-    }
-  }
 }
 
-/** `spark.sql.extensions` injector: wires the graft functions plus the
-  * bucketed range-join optimizer rule into every session built with this
-  * extension — the deployment path for a cluster (no driver-side
-  * registration call needed). */
+/** `spark.sql.extensions` injector: the ONE install path for everything
+  * graft adds to a session — the SQL functions, the bucketed range-join
+  * and global-window optimizer rules, and the top-k-per-group planner
+  * strategy. Nothing mutates a session at query time; a session either
+  * has the extension from its builder or does not have graft planning. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.fns.foreach { case (name, builder) =>
@@ -134,5 +123,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => graft.plans.BucketedRangeJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.GlobalWindowRule)
+    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
   }
 }

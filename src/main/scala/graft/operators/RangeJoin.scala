@@ -14,22 +14,13 @@ import org.apache.spark.sql.functions._
   * shuffle, hash/sort-merge) followed by the exact residual filter.
   * Replication factor is a constant 3; comparisons drop from n×m to the
   * pairs sharing a bucket.
+  *
+  * A plain `l.join(r, abs(l.v - r.v) <= tol)` plans as this bucketed equi
+  * join without calling [[bucketed]]: [[graft.plans.BucketedRangeJoinRule]]
+  * rewrites it in every session built with `GraftExtensions` (the
+  * [[graft.GraftSession]] default).
   */
 object RangeJoin {
-
-  /** Idempotently registers [[graft.plans.BucketedRangeJoinRule]] on the
-    * session, so a plain `l.join(r, abs(l.v - r.v) <= tol)` plans as the
-    * bucketed equi join automatically — no manual call to [[bucketed]]
-    * needed. Sessions built with `GraftExtensions` (the GraftSession
-    * default) already have the rule. */
-  def enableAuto(spark: org.apache.spark.sql.SparkSession): Unit =
-    synchronized {
-      if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.BucketedRangeJoinRule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+
-            graft.plans.BucketedRangeJoinRule
-    }
 
   def bucketed(left: DataFrame, leftVal: String, right: DataFrame,
       rightVal: String, tol: Double): DataFrame = {

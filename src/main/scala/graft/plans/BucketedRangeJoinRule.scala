@@ -44,8 +44,9 @@ import org.apache.spark.sql.types.{ArrayType, Decimal, DoubleType, LongType}
   *     for ANY w (the original predicate is re-checked as residual;
   *     degenerate hi < lo intervals explode to zero buckets).
   *
-  * Injected via [[graft.functions.GraftExtensions]];
-  * `spark.experimental.extraOptimizations` works too.
+  * Injected via [[graft.functions.GraftExtensions]], the only install
+  * path. Switch it off per session with
+  * `spark.sql.optimizer.excludedRules`.
   */
 object BucketedRangeJoinRule extends Rule[LogicalPlan] {
 

@@ -69,14 +69,6 @@ import org.apache.spark.sql.types.IntegerType
   */
 object GlobalWindowRule extends Rule[LogicalPlan] {
 
-  /** Opt-in for sessions not built with GraftExtensions (tests, REPLs):
-    * appends this rule to `spark.experimental.extraOptimizations`. */
-  def enableAuto(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
   import org.apache.spark.sql.catalyst.expressions.aggregate.{
     AggregateExpression, Complete, Count, Max, Min, Sum}
 

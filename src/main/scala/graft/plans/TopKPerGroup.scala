@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow,
@@ -150,12 +150,13 @@ object TopKPerGroupStrategy extends SparkStrategy {
   }
 }
 
-/** User-facing constructor (registers the strategy on first use). */
+/** User-facing constructor. The logical node plans through
+  * [[TopKPerGroupStrategy]], which [[graft.functions.GraftExtensions]]
+  * injects into every [[graft.GraftSession]]. */
 object TopK {
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[Column], k: Int, rankName: String = "rn"): DataFrame = {
     val spark = df.sparkSession
-    ensureStrategy(spark)
     val child = df.queryExecution.analyzed
     val g = groupCols.map { n =>
       child.output.find(a => spark.sessionState.conf.resolver(a.name, n))
@@ -174,11 +175,5 @@ object TopK {
     GraftSqlBridge.ofRows(spark, TopKPerGroup(g, o, k,
       AttributeReference(rankName, LongType, nullable = false)(),
       child))
-  }
-
-  private def ensureStrategy(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
   }
 }

@@ -21,8 +21,10 @@ object Tables {
     *
     * `events.parquet` has shipped with two physical types for `ts`:
     * INT64 TIMESTAMP(NANOS), which Spark 4 rejects by default
-    * (PARQUET_TYPE_ILLEGAL) — `nanosAsLong` surfaces it as BIGINT
-    * epoch-nanos — and TIMESTAMP(MICROS), which Spark reads as
+    * (PARQUET_TYPE_ILLEGAL) — [[graft.GraftSession]] sets
+    * `spark.sql.legacy.parquet.nanosAsLong` once at session build, which
+    * surfaces it as BIGINT epoch-nanos (a session without that conf
+    * fails the scan) — and TIMESTAMP(MICROS), which Spark reads as
     * TIMESTAMP_NTZ. [[normalizeEventTs]] folds both into the BIGINT
     * epoch-nanos shape the window operators consume (integer bucket
     * math — no timestamp semantics needed downstream).
@@ -45,16 +47,15 @@ object Tables {
     // registry is ≤ names.size entries per live (session, dir))
     if (memo.size > 64) memo.clear()
     memo.getOrElseUpdate((spark, dir, name), {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events") normalizeEventTs(df) else df
     })
   }
 
   /** Rewrite a timestamp-typed `ts` to BIGINT epoch-nanos; leave an
-    * already-integral `ts` untouched. The session time zone is pinned to
-    * UTC (GraftSession / test JVM opts), so the NTZ→LTZ cast is the
-    * identity on the underlying micros and the conversion is exact. */
+    * already-integral `ts` untouched. GraftSession pins the session time
+    * zone to UTC, so the NTZ→LTZ cast is the identity on the underlying
+    * micros and the conversion is exact. */
   def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(TimestampNTZType) | Some(TimestampType) =>

@@ -277,11 +277,13 @@ object VersionedTable {
     * terminal write stage has no such downstream, so size-first is
     * strictly right for it. Round 12 A/B (gates, TimeQ ×3 adjacent):
     * sem 7.4→6.9, substr 4.6→4.2, boilerplate 3.4→3.0,
-    * changepoint 3.5→3.1 s/run. Conf restored in finally. */
+    * changepoint 3.5→3.1 s/run. Conf restored in finally: the prior
+    * explicit setting, or unset when there was none (`getOption` would
+    * return the default and leave it pinned on the session). */
   private def writeSized(df: DataFrame, dir: String): Unit = {
     val conf = df.sparkSession.conf
     val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val prev = conf.getOption(key)
+    val prev = conf.getAll.get(key)
     conf.set(key, "false")
     try df.write.parquet(dir)
     finally prev match {

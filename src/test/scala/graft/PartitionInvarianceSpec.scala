@@ -58,17 +58,11 @@ class PartitionInvarianceSpec extends SparkSpec {
     // under both partition counts and must emit bit-identical pairs
     "q_sem_gate")
 
-  private def canon(name: String, parts: Int): Seq[String] = {
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      val rows = SparkEntry.queries(name)(spark, dir)
+  private def canon(name: String, parts: Int): Seq[String] =
+    try withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+      SparkEntry.queries(name)(spark, dir)
         .collect().map(_.toString).sorted.toSeq
-      rows
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      graft.operators.Dedup.releaseAll(spark)
-    }
-  }
+    } finally graft.operators.Dedup.releaseAll(spark)
 
   names.foreach { name =>
     test(s"$name: identical rows under 5 vs 32 shuffle partitions") {

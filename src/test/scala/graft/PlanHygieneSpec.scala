@@ -1,22 +1,25 @@
 package graft
 
 import graft.athenaeum.SparkSpec
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{WindowGroupLimit, Window => LWindow}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
-import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Meta-guard over EVERY SparkEntry query's physical plan: no query may
   * silently regress to a nested-loop/cartesian shape (the classic
   * 100 TB killer — a changed filter or join key turns a hash join into
   * BroadcastNestedLoopJoin and nothing fails until production).
   * Queries that use a cross join BY DESIGN are whitelisted with the
-  * reason pinned here.
+  * reason pinned here. The plans come from the shared [[QuerySurface]]
+  * pass, which also executes each query for SmokeAllQueriesSpec.
   */
 class PlanHygieneSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** Each query's audit, or `name (plan failed: …)`, through `check`. */
+  private def planOffenders(check: (String, QuerySurface.Audit) => Option[String])
+      : Seq[String] =
+    QuerySurface.at(spark, dir).flatMap { case (name, r) =>
+      r.audit.fold(e => Some(s"$name (plan failed: $e)"), check(name, _))
+    }
 
   // deliberate cross/nested-loop joins: tiny or broadcast-scored by design
   private val intentionalCross = Set(
@@ -81,14 +84,8 @@ class PlanHygieneSpec extends SparkSpec {
     "q_join_range")     // supplier self range: dim x dim
 
   test("no unintended BroadcastNestedLoopJoin / CartesianProduct in any query") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val plan = fn(spark, dir).queryExecution.executedPlan.toString
-          val nested = plan.contains("BroadcastNestedLoopJoin") ||
-            plan.contains("CartesianProduct")
-          if (nested && !intentionalCross(name)) Some(name) else None
-        } catch { case e: Throwable => Some(s"$name (plan failed: ${e.getMessage})") }
+    val offenders = planOffenders { (name, a) =>
+      if (a.nestedLoop && !intentionalCross(name)) Some(name) else None
     }
     assert(offenders.isEmpty,
       s"nested-loop plans in: ${offenders.mkString(", ")}")
@@ -122,38 +119,12 @@ class PlanHygieneSpec extends SparkSpec {
   // bounded (not data-sized) at any scale factor.
   private val allowedGlobalWindow = Set.empty[String]
 
-  /** Unpartitioned Window/WindowGroupLimit nodes in the physical plan,
-    * descending into cached (InMemoryRelation) subtrees — a persist
-    * barrier must not hide a single-partition window from the guard. */
-  private def physicalGlobalWindows(p: SparkPlan): Seq[String] =
-    p.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty =>
-        Seq("WindowExec")
-      case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-        Seq("WindowGroupLimitExec")
-      case s: InMemoryTableScanExec =>
-        physicalGlobalWindows(s.relation.cachedPlan)
-    }.flatten
-
-  private def globalWindows(df: DataFrame): Seq[String] =
-    df.queryExecution.optimizedPlan.collect {
-      case w: LWindow if w.partitionSpec.isEmpty => Seq("Window")
-      case w: WindowGroupLimit if w.partitionSpec.isEmpty =>
-        Seq("WindowGroupLimit")
-      case im: InMemoryRelation => physicalGlobalWindows(im.cachedPlan)
-    }.flatten
-
   test("no query moves data to a single partition via an unpartitioned window") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val hits = globalWindows(fn(spark, dir))
-          if (hits.nonEmpty && !allowedGlobalWindow(name))
-            Some(s"$name: ${hits.mkString(", ")}")
-          else None
-        } catch {
-          case e: Throwable => Some(s"$name (plan failed: ${e.getMessage})")
-        } finally graft.operators.Dedup.releaseAll(spark)
+    val offenders = planOffenders { (name, a) =>
+      val hits = a.globalWindows
+      if (hits.nonEmpty && !allowedGlobalWindow(name))
+        Some(s"$name: ${hits.mkString(", ")}")
+      else None
     }
     assert(offenders.isEmpty,
       "single-partition windows (use plans.ParallelRank's two-phase " +
@@ -161,18 +132,12 @@ class PlanHygieneSpec extends SparkSpec {
   }
 
   test("no query re-scans a base relation 3+ times (multi-consumer recompute guard)") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val bound = intentionalMultiScan.getOrElse(name, 2)
-          val hot = graft.plans.PlanAudit.scanCounts(fn(spark, dir))
-            .filter(_._2 > bound)
-          if (hot.nonEmpty)
-            Some(s"$name: ${hot.map { case (p, n) => s"$p x$n" }.mkString(", ")}")
-          else None
-        } catch {
-          case e: Throwable => Some(s"$name (plan failed: ${e.getMessage})")
-        } finally graft.operators.Dedup.releaseAll(spark)
+    val offenders = planOffenders { (name, a) =>
+      val bound = intentionalMultiScan.getOrElse(name, 2)
+      val hot = a.scanCounts.filter(_._2 > bound)
+      if (hot.nonEmpty)
+        Some(s"$name: ${hot.map { case (p, n) => s"$p x$n" }.mkString(", ")}")
+      else None
     }
     assert(offenders.isEmpty,
       s"multi-scan plans (persist-barrier the shared subtree): ${offenders.mkString("; ")}")

@@ -6,7 +6,8 @@ import graft.athenaeum.SparkSpec
   * tripwire that keeps `sbt test` sufficient to catch a runtime break
   * (ANSI overflow, divide-by-zero on a degenerate group, a renamed
   * column) without waiting for the driver's sf0.01 correctness sweep.
-  * PlanHygieneSpec only plans; this one runs.
+  * The runs come from the shared [[QuerySurface]] pass, which also
+  * audits each query's plans for PlanHygieneSpec.
   */
 class SmokeAllQueriesSpec extends SparkSpec {
 
@@ -36,13 +37,19 @@ class SmokeAllQueriesSpec extends SparkSpec {
   }
 
   test("every query executes at sf0.001 (no runtime failures)") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try { fn(spark, dir).count(); None }
-        catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
-        finally graft.operators.Dedup.releaseCaches()
+    val failures = QuerySurface.at(spark, dir).flatMap { case (name, r) =>
+      r.runError.map(e => s"$name: $e")
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("building and running a query leaves the session conf and planner hooks unchanged") {
+    // a query that flips a conf or appends an experimental rule/strategy
+    // changes every later query planned on the same session
+    val drifted = QuerySurface.at(spark, dir).collect {
+      case (name, r) if r.drift.nonEmpty => s"$name: ${r.drift.mkString("; ")}"
+    }
+    assert(drifted.isEmpty, drifted.mkString("\n"))
   }
 
   test("entry() smoke: flagship query returns rows") {

@@ -1,12 +1,36 @@
 package graft.athenaeum
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Run `f` with each `key -> value` set on the session, then put back
+    * what was there: the prior explicit value, or no setting at all. */
+  def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Run `f` with the graft optimizer rules excluded — the naive
+    * baseline a rule-vs-naive spec compares the rewrite against (with the
+    * rules on, any matchable spelling would itself be rewritten). */
+  def withoutGraftRules[T](f: => T): T =
+    withConf("spark.sql.optimizer.excludedRules" -> Seq(
+      graft.plans.GlobalWindowRule, graft.plans.BucketedRangeJoinRule)
+      .map(_.ruleName).mkString(","))(f)
 
   /** Directory containing the golden fixtures on the test classpath. */
   def goldenDir: String =
@@ -29,14 +53,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Unpartitioned (single-partition) Window/WindowGroupLimit operators
+    * in a physical plan, looking through adaptive plans, their query
+    * stages and cached subtrees — none of them may hide one. */
+  def unpartitionedWindows(p: SparkPlan): Seq[String] = p.collect {
+    case w: WindowExec if w.partitionSpec.isEmpty => Seq("WindowExec")
+    case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
+      Seq("WindowGroupLimitExec")
+    case a: AdaptiveSparkPlanExec => unpartitionedWindows(a.executedPlan)
+    case q: QueryStageExec => unpartitionedWindows(q.plan)
+    case s: InMemoryTableScanExec =>
+      unpartitionedWindows(s.relation.cachedPlan)
+  }.flatten
+
+  /** The product posture ([[graft.GraftSession]]) plus the test
+    * deployment settings only. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val s = graft.GraftSession.builder("graft-test", 4)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .appName("graft-test").getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

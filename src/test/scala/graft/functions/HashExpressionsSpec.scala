@@ -196,7 +196,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("SetOverlap == size(array_intersect) on real shingle pairs, both element types") {
-    GraftFunctions.register(spark) // graft_polyhash used via SQL below
     val sh = Tables(spark, dir, "documents").select(
       col("doc_id"),
       GraftFunctions.shingles(col("text"), 3).as("sh"))
@@ -221,7 +220,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_* functions usable from spark.sql") {
-    GraftFunctions.register(spark)
     Tables(spark, dir, "documents").createOrReplaceTempView("docs_reg")
     val r = spark.sql(
       """SELECT graft_polyhash(text) AS h,
@@ -236,7 +234,6 @@ class HashExpressionsSpec extends SparkSpec {
 
   test("LzPhrases: hand-parsed LZ78 counts, repetition collapses") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // hand parses: 'aaaa' = a|aa|a -> 3; 'abab' = a|b|ab -> 3;
     // 'abcd' = 4 singletons; empty string -> 0 phrases
     val got = Seq("aaaa", "abab", "abcd", "")

@@ -53,7 +53,6 @@ class HilbertSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_hilbert matches the JVM impl") {
-    GraftFunctions.register(spark)
     val r = spark.sql("SELECT graft_hilbert(3L, 5L, 4) AS h").head().getLong(0)
     assert(r == graft.functions.expressions.HilbertImpl.xy2d(3L, 5L, 4))
   }

@@ -75,7 +75,6 @@ class MultiPatternSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_multi_count with a constant array") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_multi_count('she sells seashells', array('she', 'sea', 'x')) AS c")
       .head().getSeq[Long](0)
@@ -86,7 +85,6 @@ class MultiPatternSpec extends SparkSpec {
     intercept[IllegalArgumentException] { counts("x", Seq.empty) }
     intercept[IllegalArgumentException] { counts("x", Seq("a", "a")) }
     intercept[IllegalArgumentException] { counts("x", Seq("a", "")) }
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_multi_count(text, array(text)) FROM VALUES ('a') AS t(text)")
         .collect()

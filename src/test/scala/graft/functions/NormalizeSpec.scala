@@ -29,7 +29,6 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_nfc collapses the two forms") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_nfc('café') = graft_nfc('café') AS same, " +
         "length(graft_nfc('café')) AS len").head()

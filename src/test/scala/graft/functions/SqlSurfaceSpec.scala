@@ -17,7 +17,6 @@ class SqlSurfaceSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("null array elements on the SQL surface null-skip, never crash") {
-    GraftFunctions.register(spark)
     // array_intersect semantics: a NULL element never counts toward the
     // overlap, and never NPEs the sort inside the merge
     val r = spark.sql(
@@ -34,7 +33,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("MinHash-LSH candidates in pure SQL == Dedup.minhashCandidates") {
-    GraftFunctions.register(spark)
     Tables(spark, dir, "documents").createOrReplaceTempView("docs_sql")
     val sql = spark.sql(
       """WITH sigs AS (
@@ -60,7 +58,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("char-ngram MinHash candidates in pure SQL == Dedup.charMinhashCandidates") {
-    GraftFunctions.register(spark)
     Tables(spark, dir, "documents").createOrReplaceTempView("docs_sql")
     val sql = spark.sql(
       """WITH sigs AS (
@@ -88,7 +85,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("Bloom novelty ingest in pure SQL == Bloom.noveltyFilter") {
     import graft.operators.Bloom
-    GraftFunctions.register(spark)
     val m = 1 << 16; val k = 5
     val docs = Tables(spark, dir, "documents")
     docs.createOrReplaceTempView("docs_sql")

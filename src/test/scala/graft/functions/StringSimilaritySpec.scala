@@ -79,7 +79,6 @@ class StringSimilaritySpec extends SparkSpec {
   }
 
   test("SQL registration: graft_jaro_winkler usable from spark.sql") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_jaro_winkler('martha', 'marhta') AS s").head.getDouble(0)
     assert(r == 0.9611111111111111)

@@ -10,17 +10,14 @@ import graft.athenaeum.SparkSpec
 class AqeSkewSpec extends SparkSpec {
 
   test("AQE splits a skewed partition at runtime (skew=true in plan)") {
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       import spark.implicits._
       // 200k rows on key 0, a handful elsewhere -> one hot partition
       val skewed = spark.range(0, 200000)
@@ -37,9 +34,6 @@ class AqeSkewSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the skew join:\n${plan.take(3000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -22,9 +22,7 @@ class RangeJoinSpec extends SparkSpec {
   }
 
   test("optimizer rule: naive abs-tolerance join auto-plans as equi join") {
-    RangeJoin.enableAuto(spark)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables(spark, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity")
       val part = Tables(spark, dir, "part").select("p_partkey", "p_size")
@@ -49,8 +47,7 @@ class RangeJoinSpec extends SparkSpec {
       assert(!fplan.contains("BroadcastNestedLoopJoin") &&
         !fplan.contains("CartesianProduct"), fplan.take(2000))
       assert(flipped.count() == naive.count())
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
   }
 
   /** Deterministic result checksum: row count + keyed sum (order- and
@@ -60,19 +57,8 @@ class RangeJoinSpec extends SparkSpec {
     df.agg(count(lit(1)), sum(col("l_orderkey") * col("p_partkey")),
       sum(col("p_partkey"))).collect()(0).toString
 
-  /** Run `f` with the graft optimizer rules removed (the baseline the
-    * rewrite is checked against — any matchable spelling would itself
-    * be rewritten, so equivalence needs the rule off). */
-  private def withRuleDisabled[T](f: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Nil
-    try f finally spark.experimental.extraOptimizations = saved
-  }
-
   test("optimizer rule: BETWEEN band form auto-plans as equi join") {
-    RangeJoin.enableAuto(spark)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables(spark, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity")
       val part = Tables(spark, dir, "part").select("p_partkey", "p_size")
@@ -84,23 +70,25 @@ class RangeJoinSpec extends SparkSpec {
       assert(!plan.contains("BroadcastNestedLoopJoin") &&
         !plan.contains("CartesianProduct"), plan.take(2000))
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-      assert(sig(band) == withRuleDisabled(sig(band)))
+      assert(sig(band) == withoutGraftRules(sig(band)))
+      // the rule-off baseline really is the un-rewritten nested loop
+      val naivePlan =
+        withoutGraftRules(band.queryExecution.executedPlan.toString)
+      assert(naivePlan.contains("BroadcastNestedLoopJoin") ||
+        naivePlan.contains("CartesianProduct"), naivePlan.take(2000))
       // between() desugars to the same conjunction
       def between = li.join(part,
         col("l_quantity").between(col("p_size") - 2, col("p_size") + 2))
       val bplan = between.queryExecution.executedPlan.toString
       assert(!bplan.contains("BroadcastNestedLoopJoin") &&
         !bplan.contains("CartesianProduct"), bplan.take(2000))
-      assert(sig(between) == withRuleDisabled(sig(between)))
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      assert(sig(between) == withoutGraftRules(sig(between)))
+    }
   }
 
   test("optimizer rule: interval containment auto-plans as equi join") {
-    RangeJoin.enableAuto(spark)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.graft.rangeJoin.bucketWidth", "4.0")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.graft.rangeJoin.bucketWidth" -> "4.0") {
       val li = Tables(spark, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity")
       // bounded-width intervals from the part side
@@ -113,23 +101,19 @@ class RangeJoinSpec extends SparkSpec {
       assert(!plan.contains("BroadcastNestedLoopJoin") &&
         !plan.contains("CartesianProduct"), plan.take(2000))
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-      assert(sig(contained) == withRuleDisabled(sig(contained)))
+      assert(sig(contained) == withoutGraftRules(sig(contained)))
       // between() spelling matches too
       def between = li.join(ivm,
         col("l_quantity").between(col("lo"), col("hi")))
       val bplan = between.queryExecution.executedPlan.toString
       assert(!bplan.contains("BroadcastNestedLoopJoin") &&
         !bplan.contains("CartesianProduct"), bplan.take(2000))
-      assert(sig(between) == withRuleDisabled(sig(between)))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.unset("spark.graft.rangeJoin.bucketWidth")
+      assert(sig(between) == withoutGraftRules(sig(between)))
     }
   }
 
   test("bucketed form avoids the nested loop even without broadcast") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables(spark, dir, "lineitem")
       val part = Tables(spark, dir, "part")
       val plan = RangeJoin.bucketed(li, "l_quantity", part, "p_size", 2.0)
@@ -137,7 +121,6 @@ class RangeJoinSpec extends SparkSpec {
       assert(!plan.contains("BroadcastNestedLoopJoin") &&
         !plan.contains("CartesianProduct"), plan.take(2000))
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
   }
 }

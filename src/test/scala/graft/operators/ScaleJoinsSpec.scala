@@ -30,16 +30,14 @@ class ScaleJoinsSpec extends SparkSpec {
     ScaleJoins.writeBucketed(
       Tables(spark, dir, "customer"), "customer_b", "c_custkey", 4)
     // disable broadcast so the join would otherwise shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("orders_b").join(spark.table("customer_b"),
         col("o_custkey") === col("c_custkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
       assert(joined.count() == 1500)
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
   }
 
   test("runtime bloom filter prunes the probe side of a selective join") {
@@ -47,14 +45,11 @@ class ScaleJoinsSpec extends SparkSpec {
     // shuffle BEFORE the join via Spark's runtime row-level bloom filter;
     // production thresholds (10 GB probe-side scan) are lowered to fire on
     // test data.
-    val confs = Seq(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables(spark, dir, "lineitem")
       val part = Tables(spark, dir, "part").filter(col("p_size") === 1)
       val joined = li.join(part, li("l_partkey") === part("p_partkey"))
@@ -65,9 +60,6 @@ class ScaleJoinsSpec extends SparkSpec {
         Tables(spark, dir, "part").filter("p_size = 1"),
         li("l_partkey") === col("p_partkey")).count()
       assert(joined.count() == expected)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -15,11 +15,8 @@ class ShuffleBudgetSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def withoutAqe[A](body: => A): A = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
+  private def withoutAqe[A](body: => A): A =
+    withConf("spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Executes `df` and returns (exchange count, total shuffle bytes
     * written). Executes via collect() on df's OWN query execution —
@@ -290,25 +287,18 @@ class ShuffleBudgetSpec extends SparkSpec {
           output.addAndGet(t.taskMetrics.outputMetrics.bytesWritten)
         }
     }
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     // accumulated state could never auto-broadcast at the scale these
-    // claims are about — without this, a test-sized state slips under
-    // the 10 MB threshold and a broken (bucketing-blind) layout would
-    // pass by broadcasting what production must stream
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
+    // claims are about — without the -1 threshold, a test-sized state
+    // slips under the 10 MB threshold and a broken (bucketing-blind)
+    // layout would pass by broadcasting what production must stream
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "32",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
     (shuffle.get(), output.get())
   }

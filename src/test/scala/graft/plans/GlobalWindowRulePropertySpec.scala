@@ -1,14 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.athenaeum.SparkSpec
+import graft.athenaeum.SparkSpec.unpartitionedWindows
 
 /** Randomized differential check of [[GlobalWindowRule]]: for random
   * frames (sizes incl. 0, heavy ties, NULLs both as sort key and as
@@ -27,13 +25,6 @@ class GlobalWindowRulePropertySpec extends SparkSpec {
       SCTest.Parameters.default.withMinSuccessfulTests(n), prop)
     assert(res.passed, res.status.toString)
   }
-
-  private def unpartitioned(p: SparkPlan): Seq[String] = p.collect {
-    case w: WindowExec if w.partitionSpec.isEmpty => Seq("WindowExec")
-    case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-      Seq("WindowGroupLimitExec")
-    case a: AdaptiveSparkPlanExec => unpartitioned(a.executedPlan)
-  }.flatten
 
   private case class Case(rows: Seq[(Long, Long, Option[Long])],
       parts: Int, key: String, asc: Boolean, nullsFirst: Boolean,
@@ -57,7 +48,6 @@ class GlobalWindowRulePropertySpec extends SparkSpec {
     parts, key, asc, nf, tb, k)
 
   test("random frames: rewritten global windows == naive plan exactly") {
-    GlobalWindowRule.enableAuto(spark)
     import spark.implicits._
     val prop = Prop.forAll(genCase) { c =>
       val df = c.rows.toDF("id", "v", "x").repartition(c.parts)
@@ -91,15 +81,17 @@ class GlobalWindowRulePropertySpec extends SparkSpec {
         d.collect().map(r => r.getLong(0) -> r.toSeq.drop(3)).toMap
       val got = q(df)
       val gm = snap(got)
-      val bad = unpartitioned(got.queryExecution.executedPlan)
-      val wm = {
-        val saved = spark.experimental.extraOptimizations
-        spark.experimental.extraOptimizations = Nil
-        try snap(q(df))
-        finally spark.experimental.extraOptimizations = saved
+      val bad = unpartitionedWindows(got.queryExecution.executedPlan)
+      val (wm, naiveGlobal) = withoutGraftRules {
+        val naive = q(df)
+        (snap(naive), unpartitionedWindows(naive.queryExecution.executedPlan))
       }
-      val ok = bad.isEmpty && gm == wm
-      if (!ok) println(s"[gwprop] FAIL case=$c bad=$bad\n got=$gm\nwant=$wm")
+      // an empty frame folds to an empty relation with no window at all;
+      // otherwise the baseline must be the un-rewritten plan
+      val naiveOk = c.rows.isEmpty || naiveGlobal.nonEmpty
+      val ok = bad.isEmpty && naiveOk && gm == wm
+      if (!ok) println(s"[gwprop] FAIL case=$c bad=$bad naive=$naiveGlobal" +
+        s"\n got=$gm\nwant=$wm")
       ok
     }
     check(prop, 20)

@@ -1,13 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.athenaeum.SparkSpec
+import graft.athenaeum.SparkSpec.unpartitionedWindows
 
 /** The transparent global-window rewrite: plain `OVER (ORDER BY …)`
   * rank-family windows must plan WITHOUT any single-partition window
@@ -15,12 +13,6 @@ import graft.athenaeum.SparkSpec
   * naive baseline is computed with the graft rules removed — with the
   * rule active, any matchable spelling would itself be rewritten. */
 class GlobalWindowRuleSpec extends SparkSpec {
-
-  private def withRuleDisabled[T](f: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Nil
-    try f finally spark.experimental.extraOptimizations = saved
-  }
 
   /** Deterministic frame with heavy TIES in v (7 distinct values over
     * 300 rows) so rank/dense_rank differ from row_number, spread over
@@ -32,17 +24,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
     }.toDF("id", "v").repartition(5)
   }
 
-  private def unpartitionedWindows(p: SparkPlan): Seq[String] = {
-    val self = p.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty => Seq("WindowExec")
-      case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-        Seq("WindowGroupLimitExec")
-      case a: AdaptiveSparkPlanExec =>
-        unpartitionedWindows(a.executedPlan)
-    }
-    self.flatten
-  }
-
   private def assertNoGlobalWindow(df: DataFrame): Unit = {
     df.collect() // finalize any adaptive plan first
     val bad = unpartitionedWindows(df.queryExecution.executedPlan)
@@ -51,14 +32,16 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("row_number over a total order: rewritten, parallel, identical") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame()
     val w = Window.orderBy(col("v"), col("id"))
     val got = df.withColumn("rn", row_number().over(w))
     assertNoGlobalWindow(got)
-    val want = withRuleDisabled {
-      df.withColumn("rn", row_number().over(w)).collect()
-        .map(r => r.getLong(0) -> r.getInt(2)).toMap
+    val want = withoutGraftRules {
+      val naive = df.withColumn("rn", row_number().over(w))
+      // the baseline really is the un-rewritten single-partition plan
+      assert(unpartitionedWindows(naive.queryExecution.executedPlan)
+        .nonEmpty, naive.queryExecution.executedPlan.toString.take(3000))
+      naive.collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     }
     val gotMap = got.collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(gotMap == want)
@@ -68,7 +51,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("rank + dense_rank + percent_rank + ntile in ONE window node") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame()
     val w = Window.orderBy(col("v")) // real ties: 7 distinct keys
     def q(d: DataFrame): DataFrame = d
@@ -87,7 +69,7 @@ class GlobalWindowRuleSpec extends SparkSpec {
         r.getDouble(3))).toMap
     def ntileHist(d: DataFrame) = d.groupBy("v", "nt").count()
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val (wantTie, wantNt) = withRuleDisabled {
+    val (wantTie, wantNt) = withoutGraftRules {
       val n = q(df)
       (tieConstant(n), ntileHist(n))
     }
@@ -96,7 +78,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("ntile remainder rule and percent_rank n=1 edge") {
-    GlobalWindowRule.enableAuto(spark)
     import spark.implicits._
     // 10 rows, ntile(4) -> buckets of 3,3,2,2 (first n mod k get extra)
     val ten = (1 to 10).map(i => (i.toLong, i.toLong)).toDF("id", "v")
@@ -112,12 +93,11 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("descending order with a tie-break rewrites correctly") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame()
     val w = Window.orderBy(col("v").desc, col("id").asc)
     val got = df.withColumn("rn", row_number().over(w))
     assertNoGlobalWindow(got)
-    val want = withRuleDisabled {
+    val want = withoutGraftRules {
       df.withColumn("rn", row_number().over(w)).collect()
         .map(r => r.getLong(0) -> r.getInt(2)).toMap
     }
@@ -125,12 +105,11 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("SQL surface: OVER (ORDER BY) through spark.sql rewrites too") {
-    GlobalWindowRule.enableAuto(spark)
     frame().createOrReplaceTempView("gw_t")
     val got = spark.sql(
       "SELECT id, rank() OVER (ORDER BY v) AS rk FROM gw_t")
     assertNoGlobalWindow(got)
-    val want = withRuleDisabled {
+    val want = withoutGraftRules {
       spark.sql("SELECT id, rank() OVER (ORDER BY v) AS rk FROM gw_t")
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     }
@@ -183,7 +162,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("top-k filter directly above the rank is LEFT to WindowGroupLimit") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame()
     val topk = df
       .withColumn("rn", row_number().over(Window.orderBy(col("v"), col("id"))))
@@ -197,7 +175,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("running sum/min/max/count + cume_dist: rewritten, identical, ties included") {
-    GlobalWindowRule.enableAuto(spark)
     import spark.implicits._
     // heavy ties in v (7 keys over 300 rows) + NULL values in the summed
     // column, incl. an ALL-NULL leading tie group (SQL sum must stay NULL
@@ -218,14 +195,13 @@ class GlobalWindowRuleSpec extends SparkSpec {
     def snap(d: DataFrame) = d.collect().map(r => r.getLong(0) ->
       (Option(r.get(3)), Option(r.get(4)), Option(r.get(5)),
         r.getLong(6), r.getDouble(7))).toMap
-    val want = withRuleDisabled(snap(q(df)))
+    val want = withoutGraftRules(snap(q(df)))
     assert(snap(got) == want)
     assert(got.schema("rs").dataType ==
       org.apache.spark.sql.types.LongType)
   }
 
   test("decimal running sum stays decimal and exact") {
-    GlobalWindowRule.enableAuto(spark)
     import spark.implicits._
     // decimal + decimal stays decimal (a double literal would silently
     // promote the column to DOUBLE and the rule would refuse the sum)
@@ -237,9 +213,9 @@ class GlobalWindowRuleSpec extends SparkSpec {
       d.withColumn("rs", sum(col("d")).over(w))
     val got = q(df)
     assertNoGlobalWindow(got)
-    val wantSchema = withRuleDisabled(q(df).schema("rs").dataType)
+    val wantSchema = withoutGraftRules(q(df).schema("rs").dataType)
     assert(got.schema("rs").dataType == wantSchema) // decimal(28,4)-ish
-    val want = withRuleDisabled {
+    val want = withoutGraftRules {
       q(df).collect().map(r => r.getLong(0) -> r.getDecimal(3)).toMap
     }
     assert(got.collect().map(r => r.getLong(0) -> r.getDecimal(3)).toMap
@@ -247,7 +223,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("fp sums, ROWS frames, and fp means are NOT rewritten") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame().withColumn("f", col("id").cast("double") * 0.1)
     val w = Window.orderBy(col("v"), col("id"))
     // double sum: reassociation would change rounding → leave naive
@@ -263,7 +238,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("a node MIXING ranks and running aggregates rewrites as one") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame()
     val w = Window.orderBy(col("v"))
     def q(d: DataFrame): DataFrame = d
@@ -274,19 +248,18 @@ class GlobalWindowRuleSpec extends SparkSpec {
     assertNoGlobalWindow(got)
     def snap(d: DataFrame) = d.collect().map(r => r.getLong(0) ->
       (r.getInt(2), r.getLong(3), r.getDouble(4))).toMap
-    val want = withRuleDisabled(snap(q(df)))
+    val want = withoutGraftRules(snap(q(df)))
     assert(snap(got) == want)
   }
 
   test("unsupported window functions leave the node untouched") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame()
     val w = Window.orderBy(col("v"), col("id"))
     // lag is not rank-family: node must not be rewritten (mixing would
     // double the pass), and results must still be correct
     val lagged = df.withColumn("prev", lag(col("id"), 1).over(w))
       .withColumn("rn", row_number().over(w))
-    val want = withRuleDisabled {
+    val want = withoutGraftRules {
       df.withColumn("prev", lag(col("id"), 1).over(w))
         .withColumn("rn", row_number().over(w))
         .collect().map(r => r.getLong(0) ->
@@ -298,7 +271,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("EXPRESSION and STRING sort keys rewrite correctly") {
-    GlobalWindowRule.enableAuto(spark)
     import spark.implicits._
     // string key with ties + an arithmetic expression key: the cutpoint
     // sample and the bucket tree must evaluate the expression, not a
@@ -315,12 +287,11 @@ class GlobalWindowRuleSpec extends SparkSpec {
     assertNoGlobalWindow(got)
     def snap(d: DataFrame) = d.collect()
       .map(r => r.getLong(0) -> (r.getInt(3), r.getInt(4))).toMap
-    val want = withRuleDisabled(snap(q(df)))
+    val want = withoutGraftRules(snap(q(df)))
     assert(snap(got) == want)
   }
 
   test("agg OVER (): share-of-total rewrites to a broadcast scalar, no window") {
-    GlobalWindowRule.enableAuto(spark)
     import spark.implicits._
     val df = frame().withColumn("x",
       when(col("v") === 3L, lit(null).cast("long")).otherwise(col("id")))
@@ -337,14 +308,14 @@ class GlobalWindowRuleSpec extends SparkSpec {
     assert(!got.queryExecution.optimizedPlan.toString.contains("Window"))
     def snap(d: DataFrame) = d.collect().map(r => r.getLong(0) ->
       (r.getDouble(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
-    val want = withRuleDisabled(snap(q(df)))
+    val want = withoutGraftRules(snap(q(df)))
     assert(snap(got) == want)
     // SQL spelling too
     df.createOrReplaceTempView("gw_sc")
     val sql = spark.sql(
       "SELECT id, id / sum(x) OVER () AS sh FROM gw_sc")
     assertNoGlobalWindow(sql)
-    val wantSql = withRuleDisabled {
+    val wantSql = withoutGraftRules {
       spark.sql("SELECT id, id / sum(x) OVER () AS sh FROM gw_sc")
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     }
@@ -356,7 +327,6 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("stateless claim: independently recomputed subtrees agree (self-join)") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame()
     val w = Window.orderBy(col("v"), col("id"))
     val ranked = df
@@ -378,13 +348,12 @@ class GlobalWindowRuleSpec extends SparkSpec {
   }
 
   test("partitioned windows are never touched") {
-    GlobalWindowRule.enableAuto(spark)
     val df = frame()
     val w = Window.partitionBy(col("v")).orderBy(col("id"))
     val got = df.withColumn("rn", row_number().over(w))
     val optimized = got.queryExecution.optimizedPlan.toString
     assert(optimized.contains("Window"), optimized.take(2000))
-    val want = withRuleDisabled {
+    val want = withoutGraftRules {
       df.withColumn("rn", row_number().over(w)).collect()
         .map(r => r.getLong(0) -> r.getInt(2)).toMap
     }

@@ -24,17 +24,12 @@ class ParallelRankSpec extends SparkSpec {
     }.toDF("id", "v").repartition(5)
   }
 
-  // The naive sides below MUST stay naive: another suite may have
-  // enabled GlobalWindowRule on the shared session, which would rewrite
-  // them into the very ParallelRank shape under test (a differential
-  // spec comparing an implementation against itself proves nothing).
-  // Run every test in this suite with the graft extra rules removed.
-  override protected def withFixture(test: NoArgTest): org.scalatest.Outcome = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Nil
-    try super.withFixture(test)
-    finally spark.experimental.extraOptimizations = saved
-  }
+  // The naive sides below MUST stay naive: the session's GlobalWindowRule
+  // would rewrite them into the very ParallelRank shape under test (a
+  // differential spec comparing an implementation against itself proves
+  // nothing). Run every test in this suite with the graft rules excluded.
+  override protected def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    withoutGraftRules(super.withFixture(test))
 
   private def naiveRank(df: DataFrame): DataFrame =
     df.withColumn("rn", row_number().over(
@@ -44,10 +39,14 @@ class ParallelRankSpec extends SparkSpec {
     val df = frame(500)
     val got = ParallelRank.rowNumber(df, "rn", 7, col("v"), col("id"))
       .select("id", "rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = naiveRank(df)
+    val naive = naiveRank(df)
+    val want = naive
       .select("id", "rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     Dedup.releaseAll(spark)
     assert(got == want)
+    // the oracle really is the un-rewritten single-partition window
+    assert(SparkSpec.unpartitionedWindows(naive.queryExecution.executedPlan)
+      .nonEmpty, naive.queryExecution.executedPlan.toString.take(2000))
   }
 
   test("ntile matches SQL NTILE semantics, including n < k and n % k != 0") {

@@ -68,15 +68,13 @@ class GraftSinkSpec extends SparkSpec {
       .select(col("event_id"), col("user_id"), col("value"))
     GraftSink.writeBucketed(ev, "sink_ev_a", 4, Seq("user_id"))
     GraftSink.writeBucketed(ev, "sink_ev_b", 4, Seq("user_id"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("sink_ev_a").groupBy("user_id").count()
         .join(spark.table("sink_ev_b").groupBy("user_id").count(), "user_id")
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("Bucketed: true"), plan.take(1500))
       assert(!plan.contains("Exchange"), plan.take(1500))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS sink_ev_a")
       spark.sql("DROP TABLE IF EXISTS sink_ev_b")
     }

@@ -37,15 +37,12 @@ class GatePlanAuditSpec extends SparkSpec {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.listenerManager.register(l)
-    try {
-      body
-      org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
-    } finally {
-      spark.listenerManager.unregister(l)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      spark.listenerManager.register(l)
+      try {
+        body
+        org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
+      } finally spark.listenerManager.unregister(l)
     }
     buf.synchronized { buf.toVector }
   }

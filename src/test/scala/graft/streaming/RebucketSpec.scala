@@ -168,20 +168,17 @@ class RebucketSpec extends SparkSpec {
           qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.listenerManager.register(l)
-    try {
-      val stale = Seq((90L, vec(0, 7))).toDF("vec_id", "embedding")
-        .select(col("vec_id").cast("long").as("id"),
-          col("embedding").as("v"))
-        .repartition(8, col("id"))
-      BucketedState.appendOnce(stale, s"$statePath/vectors", 9L,
-        "id", 8, prePartitioned = true)
-      org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
-    } finally {
-      spark.listenerManager.unregister(l)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      spark.listenerManager.register(l)
+      try {
+        val stale = Seq((90L, vec(0, 7))).toDF("vec_id", "embedding")
+          .select(col("vec_id").cast("long").as("id"),
+            col("embedding").as("v"))
+          .repartition(8, col("id"))
+        BucketedState.appendOnce(stale, s"$statePath/vectors", 9L,
+          "id", 8, prePartitioned = true)
+        org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
+      } finally spark.listenerManager.unregister(l)
     }
     val realigned = plans.synchronized(plans.toVector).exists(_.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>

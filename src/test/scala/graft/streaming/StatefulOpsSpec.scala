@@ -10,6 +10,11 @@ case class StreamDoc(doc_id: Long, text: String)
 
 class StatefulOpsSpec extends SparkSpec {
 
+  // transformWithState requires the RocksDB provider (column families)
+  private def withRocksDb[T](f: => T): T = withConf(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
+
   test("firstSeen emits exactly one row per key across batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -32,10 +37,7 @@ class StatefulOpsSpec extends SparkSpec {
   test("lshNearDupStream flags near-dups against earlier batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    // transformWithState requires the RocksDB provider (column families)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
     val mem = MemoryStream[StreamDoc]
     val q = StatefulOps
       .lshNearDupStream(mem.toDF(), "doc_id", "text", threshold = 0.5)
@@ -60,8 +62,7 @@ class StatefulOpsSpec extends SparkSpec {
     assert(hits.nonEmpty)
     assert(hits.forall(h => h.new_id == 4L && h.seen_id == 1L))
     assert(hits.forall(_.est_jaccard == 1.0))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("runningCounts accumulates state across batches") {
@@ -88,9 +89,7 @@ class StatefulOpsSpec extends SparkSpec {
   test("firstSeen runs on the RocksDB state store (production provider)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[Keyed]
       val q = StatefulOps.firstSeen(mem.toDS()).writeStream
         .format("memory").queryName("first_seen_rocks")
@@ -102,8 +101,7 @@ class StatefulOpsSpec extends SparkSpec {
       val got = spark.table("first_seen_rocks").as[Keyed].collect()
         .map(k => (k.key, k.id)).toSet
       assert(got == Set(("a", 1L), ("b", 3L)))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("dropDuplicatesWithinWatermark dedups a key column") {
@@ -125,9 +123,7 @@ class StatefulOpsSpec extends SparkSpec {
   test("transformWithState running stats accumulate across batches (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[Keyed]
       val q = StatefulOps.runningStatsTws(mem.toDS()).writeStream
         .format("memory").queryName("tws_stats")
@@ -145,16 +141,13 @@ class StatefulOpsSpec extends SparkSpec {
           org.apache.spark.sql.functions.max("maxId").as("maxId"))
         .as[(String, Long, Long, Long)].collect().toSet
       assert(last == Set(("a", 3L, 2L, 7L), ("b", 1L, 9L, 9L)))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("transformWithState top-k per key: bounded state, out-of-order input (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[StatefulOps.Valued]
       val q = StatefulOps.topKTws(mem.toDS(), k = 3).writeStream
         .format("memory").queryName("tws_topk")
@@ -183,17 +176,14 @@ class StatefulOpsSpec extends SparkSpec {
       assert(lastA == Seq((1L, 5L, 50.0), (2L, 2L, 40.0), (3L, 4L, 30.0)))
       val lastB = rows.filter(_.key == "b").map(o => (o.rank, o.id, o.value))
       assert(lastB.toSet == Set((1L, 9L, 5.0)))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("transformWithState KMV distinct: bounded state, batch-sketch parity (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       // 300 distinct mixed hashes for key a (stream k=8 far exceeded),
       // 3 (with repeats) for key b — delivered across two batches
       def mix(i: Long): Long = (i * 2654435761L) % 1000000007L
@@ -224,17 +214,14 @@ class StatefulOpsSpec extends SparkSpec {
       assert(lastA.est_distinct == batchEst)
       // duplicates never inflate: b saw 4 rows, 3 distinct
       assert(lastB.sketch_size == 3L && lastB.est_distinct == 3.0)
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("transformWithState quantile sample: bounded state, batch-aggregator parity (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       // 300 rows for key a (k=8 far exceeded), delivered out of order
       // across two batches; key b stays below k
       def mix(i: Long): Long = (i * 2654435761L) % 1000000007L
@@ -272,16 +259,13 @@ class StatefulOpsSpec extends SparkSpec {
       assert(lastA.est_p90 == batch.getDouble(1))
       // below k: the sample is exact; p50 of {70, 30} picks index 0
       assert(lastB.n_sample == 2L && lastB.est_p50 == 0.003)
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("transformWithState count-min: fixed state, over-count-only, exact when sparse (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       // key a: item X arrives 5 times split across two batches, plus
       // 200 mixed one-off hashes that stress collisions; key b stays
       // sparse (3 distinct, one repeat)
@@ -342,16 +326,13 @@ class StatefulOpsSpec extends SparkSpec {
       val bEsts = rows.filter(_.key == "b").map(r => (r.h, r.est))
       assert(bEsts.filter(_._1 == mix(7)).map(_._2).sorted.toSeq == Seq(1L, 2L))
       assert(bEsts.filter(_._1 == mix(8)).map(_._2).toSeq == Seq(1L))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("transformWithState histogram quantiles: sketch state, batch-rule parity (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[StatefulOps.Valued]
       val q = StatefulOps.histQuantileTws(mem.toDS(), width = 10.0)
         .writeStream
@@ -380,8 +361,7 @@ class StatefulOpsSpec extends SparkSpec {
       val first = rows.filter(_.n == 10L).map(o => o.pct -> o.lo).toMap
       assert(first(50L) == 0.0)
       assert(first(90L) == 0.0)
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("stream-static enrich broadcasts the dimension per micro-batch") {
@@ -429,9 +409,7 @@ class StatefulOpsSpec extends SparkSpec {
   test("transformWithState sessions close via event-time timers (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[Keyed]
       val gapUs = 1800L * 1000000 // 30 min
       val q = StatefulOps.sessionsTws(mem.toDS(), gapUs).writeStream
@@ -454,15 +432,12 @@ class StatefulOpsSpec extends SparkSpec {
         .map(s => (s.key, s.start_us, s.end_us, s.n)).toSet
       assert(got.contains(("a", 3600000000L, 4200000000L, 2L)),
         s"session for 'a' not emitted: $got")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("lshNearDupStream checkpoint restart: the banding index survives") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("lsh_ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("lsh_out").toString
     val mem = MemoryStream[StreamDoc]
@@ -472,7 +447,7 @@ class StatefulOpsSpec extends SparkSpec {
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
     val dupText = "state that must survive a restart of the streaming query here"
-    try {
+    withRocksDb {
       val q1 = start()
       try {
         mem.addData(StreamDoc(1, dupText))
@@ -489,8 +464,7 @@ class StatefulOpsSpec extends SparkSpec {
         .collect()
       assert(hits.nonEmpty, "index lost across restart")
       assert(hits.forall(h => h.new_id == 2L && h.seen_id == 1L))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("checkpoint restart: state survives, seen keys are not re-emitted") {
@@ -569,9 +543,7 @@ class StatefulOpsSpec extends SparkSpec {
   test("streamingQuota admits at most n per key across batches (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[(Long, String)]
       val q = StatefulOps.streamingQuota(
           mem.toDF().toDF("id", "src"), "id", "src", n = 2)
@@ -588,16 +560,13 @@ class StatefulOpsSpec extends SparkSpec {
       val bySrc = out.groupBy(_.shard).view.mapValues(_.map(_.id).sorted.toSeq).toMap
       assert(bySrc("a") == Seq(1L, 2L), s"src a: ${bySrc("a")}")
       assert(bySrc("b") == Seq(3L, 5L), s"src b: ${bySrc("b")}")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("bloomDedupTws: no duplicate ever emitted, novels pass (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[StreamDoc]
       val q = StatefulOps.bloomDedupTws(mem.toDF(), "doc_id", "text")
         .writeStream.format("memory").queryName("bloomdedup")
@@ -619,8 +588,7 @@ class StatefulOpsSpec extends SparkSpec {
       assert(out.map(_.fp).distinct.length == out.length)
       // at this tiny load FPP ~ 0: exactly the three first-seen docs pass
       assert(out.map(_.id).sorted.toSeq == Seq(1L, 2L, 4L))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("streaming funnel: completion, in-key deadline fail, timer eviction fail") {
@@ -664,9 +632,7 @@ class StatefulOpsSpec extends SparkSpec {
   test("transformWithState Misra-Gries: bounded state, containment guarantee (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val k = 4
       // key a: 'hot' appears 120 times among 300 rows (freq > n/(k+1) =
       // 60 — MUST survive); 60 distinct cold items appear 3x each,
@@ -702,16 +668,13 @@ class StatefulOpsSpec extends SparkSpec {
       // b: two batches of the same single item accumulate exactly
       val lastB = rows.filter(_.key == "b").last
       assert(lastB.item == "x" && lastB.cnt_lb == 2L)
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("sessions split on gap WITHIN one micro-batch (no timer between bursts)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val mem = MemoryStream[Keyed]
       val gapUs = 1800L * 1000000 // 30 min
       val h = 3600L * 1000000
@@ -738,8 +701,7 @@ class StatefulOpsSpec extends SparkSpec {
       assert(got == Set((h, h + 600L * 1000000, 2L),
         (7 * h, 7 * h + 60L * 1000000, 2L)),
         s"one-batch bursts must split into two sessions: $got")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("firstSeen keeps a recently-active key (event-anchored, refreshed eviction)") {

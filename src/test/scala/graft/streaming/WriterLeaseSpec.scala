@@ -107,15 +107,14 @@ class WriterLeaseSpec extends SparkSpec {
   test("a malformed graft.state.writerLeaseMs fails with the conf key named, not a bare NumberFormatException") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-lease4").toString
-    spark.conf.set("graft.state.writerLeaseMs", "ten minutes")
-    try {
+    withConf("graft.state.writerLeaseMs" -> "ten minutes") {
       val boom = intercept[IllegalArgumentException] {
         asQuery("query-C") {
           BucketedState.appendOnce(df(0), dir, 0L, "k", 4)
         }
       }
       assert(boom.getMessage.contains("graft.state.writerLeaseMs"))
-    } finally spark.conf.unset("graft.state.writerLeaseMs")
+    }
   }
 
   test("a dead holder's lease expires: a new query takes over after the ttl") {
@@ -124,15 +123,14 @@ class WriterLeaseSpec extends SparkSpec {
     asQuery("query-old") {
       BucketedState.appendOnce(df(0), dir, 0L, "k", 4)
     }
-    spark.conf.set("graft.state.writerLeaseMs", "1")
-    try {
+    withConf("graft.state.writerLeaseMs" -> "1") {
       Thread.sleep(5)
       // restarted/replacement query: the stale lease is taken over and
       // the stream continues where the old one left off
       asQuery("query-new") {
         BucketedState.appendOnce(df(1), dir, 1L, "k", 4)
       }
-    } finally spark.conf.unset("graft.state.writerLeaseMs")
+    }
     assert(BucketedState.committedBatches(spark, dir) == Set(0L, 1L))
     assert(BucketedState.readBefore(spark, dir, 99L).get
       .filter(col("k") === 1L).count() == 1L)
