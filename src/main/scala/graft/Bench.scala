@@ -17,9 +17,13 @@ import scala.collection.mutable.LinkedHashMap
   * rounds 1–3 lines — which inlined every per-query map — were truncated
   * mid-JSON and recorded as `parsed: null`. The stdout `queries` map
   * therefore carries just the 22 TPC-H heads plus the flagship pipeline
-  * operators; the COMPLETE per-query cold/warm/gc maps for all queries go
-  * to `BENCH_FULL.json` in the working directory (the repo root under the
-  * driver's sbt invocation), named in the line's `detail` field.
+  * operators; the COMPLETE per-query maps for all queries go to
+  * `BENCH_FULL.json` in the working directory (the repo root under the
+  * driver's sbt invocation), named in the line's `detail` field: cold
+  * (`queries`), `warm` and `cold_retry` seconds, GC milliseconds (`gc`,
+  * `warm_gc`), Spark jobs (`jobs`, `warm_jobs`) and exact codegen
+  * compiles (`compiles`, `warm_compiles`) — every counter one [[Work]]
+  * record per query slot.
   *
   * Two full passes over every query: the cold pass includes JIT/codegen cost
   * for each query's distinct expressions; the warm pass isolates steady-state
@@ -32,9 +36,9 @@ import scala.collection.mutable.LinkedHashMap
   * across runs (so warm totals are comparable run-to-run) but different
   * from declaration order (so a query's warm cost is not a function of
   * which caches/JIT state its declaration neighbors left behind). Per-query
-  * GC time (delta of the JVM collector beans around each query) is emitted
-  * alongside the timings: an entry whose wall clock spikes while its gc slot
-  * spikes too is late-JVM heap pressure, not a plan regression.
+  * GC time ([[Work.gcMs]]) is emitted alongside the timings: an entry
+  * whose wall clock spikes while its gc slot spikes too is late-JVM heap
+  * pressure, not a plan regression.
   *
   * SELF-ADJUDICATION: a query whose recorded cold exceeds 10× its warm
   * (and 1 s absolute) is re-measured ONCE after both passes and the
@@ -43,29 +47,11 @@ import scala.collection.mutable.LinkedHashMap
   * the retry exposes it in the record itself instead of needing an
   * offline fresh-JVM adjudication. `adj_total` is the cold total with
   * retries substituted; `value` stays the RAW cold total. The run also
-  * logs end-of-run JIT code-cache occupancy to stderr (the round-6
-  * outliers' suspected cause; the build reserves 512m + flushing).
+  * logs end-of-run JIT code-cache occupancy (the round-6 outliers'
+  * suspected cause; the build reserves 512m + flushing) and the cold
+  * and warm passes' total compile counts to stderr.
   */
 object Bench {
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-  }
-
-  /** Spark codegen (Janino) compile tally — the host-noise-proof
-    * evidence channel for codegen-cache sizing: compile COUNT and
-    * total compile TIME are work counters, not wall clock, so they
-    * A/B cleanly across differently-loaded runs. */
-  private def logCodegenMetrics(): Unit = {
-    import org.apache.spark.metrics.source.CodegenMetrics._
-    val h = METRIC_COMPILATION_TIME
-    System.err.println(s"[bench] codegen compiles: ${h.getCount}, " +
-      f"total ${h.getCount * h.getSnapshot.getMean / 1000.0}%.1f s " +
-      s"(generated ${METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount} " +
-      "classes)")
-  }
-
   private def logCodeCache(): Unit = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
@@ -197,39 +183,51 @@ object Bench {
     }
   }
 
+  /** One query slot: wall seconds (-1 when the query threw) and the
+    * [[Work]] counters BENCH_FULL.json reports. Scalars only — a kept
+    * Work would hold its executed plans, and through them every shuffle
+    * and broadcast of the pass, reachable. */
+  private final case class Slot(secs: Double, gcMs: Long, jobs: Int,
+      compiles: Long)
+
+  private def brief(e: Throwable): String =
+    (e.getClass.getSimpleName + ": " +
+      Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
+      .take(300)
+
   private def runPass(
       spark: SparkSession,
       sfDir: String,
       order: Seq[String],
       errors: LinkedHashMap[String, String])
-      : (LinkedHashMap[String, Double], LinkedHashMap[String, Double]) = {
-    val out = LinkedHashMap.empty[String, Double]
-    val gc = LinkedHashMap.empty[String, Double]
+      : LinkedHashMap[String, Slot] = {
+    val out = LinkedHashMap.empty[String, Slot]
     order.foreach { name =>
       val fn = SparkEntry.queries(name)
-      val g0 = gcMillis()
-      val t0 = System.nanoTime()
-      val ok =
+      val (ok, w) = Work.measure(spark) {
         try { fn(spark, sfDir).count(); true }
         catch {
           case e: Throwable =>
             // last error wins (warm overwrite of a cold error is fine: same bug)
-            errors(name) = (e.getClass.getSimpleName + ": " +
-              Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString).take(300)
+            errors(name) = brief(e)
             false
         }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // cache lifecycle: caller-owned; also sweep localCheckpoint blocks
-      graft.operators.Dedup.releaseAll(spark)
-      out(name) = if (ok) dt else -1.0
-      gc(name) = (gcMillis() - g0).toDouble
+      }
+      out(name) = Slot(if (ok) w.wallS else -1.0, w.gcMs, w.jobs, w.compiles)
     }
-    (out, gc)
+    out
   }
 
-  private def jmap(m: LinkedHashMap[String, Double]): String =
-    m.map { case (k, v) => "\"" + k + "\":" + (math.rint(v * 1000) / 1000) }
-      .mkString("{", ",", "}")
+  private def jmap(m: Iterable[(String, Any)]): String =
+    m.map { case (k, v) =>
+      "\"" + k + "\":" + (v match {
+        case d: Double => math.rint(d * 1000) / 1000
+        case n => n
+      })
+    }.mkString("{", ",", "}")
+
+  private def slots(m: LinkedHashMap[String, Slot])(f: Slot => Any): String =
+    jmap(m.map { case (k, s) => k -> f(s) })
 
   private def jescape(s: String): String =
     s.flatMap {
@@ -275,50 +273,47 @@ object Bench {
     // memo would retry inside a consumer query's slot, and a record
     // whose fixture_sec looks plausibly small must not hide that.
     val errors = LinkedHashMap.empty[String, String]
-    val f0 = System.nanoTime()
-    try SparkEntry.prewarmFixtures(spark, sfDir)
-    catch { case e: Throwable =>
-      errors("__fixture_prewarm") = (e.getClass.getSimpleName + ": " +
-        Option(e.getMessage).getOrElse("").linesIterator.take(1)
-          .mkString).take(300) }
-    val fixtureSec = (System.nanoTime() - f0) / 1e9
-    graft.operators.Dedup.releaseAll(spark)
+    val fixtureSec = Work.measure(spark) {
+      try SparkEntry.prewarmFixtures(spark, sfDir)
+      catch { case e: Throwable => errors("__fixture_prewarm") = brief(e) }
+    }._2.wallS
     val calib0 = calibrate()
     val calibIo0 = calibrateIo()
     val names = SparkEntry.queries.keys.toSeq
     // cold pass keeps declaration order (comparable to earlier rounds);
     // warm pass uses a FIXED-seed shuffle — deterministic run-to-run
     val warmOrder = new scala.util.Random(42).shuffle(names)
-    val (cold, coldGc) = runPass(spark, sfDir, names, errors)
-    val (warm, warmGc) = runPass(spark, sfDir, warmOrder, errors)
+    val cold = runPass(spark, sfDir, names, errors)
+    val warm = runPass(spark, sfDir, warmOrder, errors)
     // self-adjudication: one re-measure for each cold outlier (>10x its
     // warm and >1s), in declaration order — a one-off JIT/scheduler
     // stall shows up as retry << cold inside the record itself
     val outliers = names.filter { n =>
-      val c = cold.getOrElse(n, -1.0); val w = warm.getOrElse(n, -1.0)
+      val c = cold(n).secs; val w = warm(n).secs
       c > 1.0 && w >= 0 && c > 10.0 * w
     }
-    val (retry, _) =
-      if (outliers.isEmpty)
-        (LinkedHashMap.empty[String, Double], LinkedHashMap.empty[String, Double])
-      else runPass(spark, sfDir, outliers, errors)
+    val retry = runPass(spark, sfDir, outliers, errors)
     val calib1 = calibrate()
     val calibIo1 = calibrateIo()
     val calibJson = "[" + (math.rint(calib0 * 100) / 100) + "," +
       (math.rint(calib1 * 100) / 100) + "]"
     val calibIoJson = "[" + (math.rint(calibIo0 * 100) / 100) + "," +
       (math.rint(calibIo1 * 100) / 100) + "]"
-    val total = cold.values.filter(_ >= 0).sum
+    val total = cold.values.map(_.secs).filter(_ >= 0).sum
     val adjTotal = names.map { n =>
-      val c = cold.getOrElse(n, -1.0)
+      val c = cold(n).secs
       // an ERRORED retry (-1) must not zero the slot — substitute only
       // a real re-measure, else keep the original cold
-      math.max(0.0,
-        retry.get(n).filter(_ >= 0).map(r => math.min(c, r)).getOrElse(c))
+      math.max(0.0, retry.get(n).map(_.secs).filter(_ >= 0)
+        .map(r => math.min(c, r)).getOrElse(c))
     }.sum
-    val warmTotal = warm.values.filter(_ >= 0).sum
+    val warmTotal = warm.values.map(_.secs).filter(_ >= 0).sum
     logCodeCache()
-    logCodegenMetrics()
+    // exact Janino compile counts — host-immune work counters that A/B
+    // cleanly across differently-loaded runs (codegen-cache sizing)
+    System.err.println("[bench] codegen compiles: cold " +
+      s"${cold.values.map(_.compiles).sum}, warm " +
+      s"${warm.values.map(_.compiles).sum}")
     val errJson = errors
       .map { case (k, v) => "\"" + k + "\":\"" + jescape(v) + "\"" }
       .mkString("{", ",", "}")
@@ -326,14 +321,16 @@ object Bench {
     // stays under the consumer's ~2 KB tail-capture window
     val full =
       s"""{"metric":"total","value":${math.rint(total * 100) / 100},"unit":"sec","n_queries":${names.size},"fixture_sec":${math.rint(fixtureSec * 100) / 100},"calib_sec":$calibJson,"calib_nominal":$calibNominal,"calib_io_sec":$calibIoJson,"calib_io_nominal":$calibIoNominal,"warm_total":${math
-          .rint(warmTotal * 100) / 100},"adj_total":${math.rint(adjTotal * 100) / 100},"queries":${jmap(cold)},"warm":${jmap(
-          warm)},"cold_retry":${jmap(retry)},"gc":${jmap(coldGc)},"warm_gc":${jmap(warmGc)},"errors":$errJson,"sf":"$sfDir"}"""
+          .rint(warmTotal * 100) / 100},"adj_total":${math.rint(adjTotal * 100) / 100},"queries":${slots(cold)(_.secs)},"warm":${slots(
+          warm)(_.secs)},"cold_retry":${slots(retry)(_.secs)},"gc":${slots(cold)(_.gcMs)},"warm_gc":${slots(warm)(_.gcMs)},"jobs":${slots(
+          cold)(_.jobs)},"warm_jobs":${slots(warm)(_.jobs)},"compiles":${slots(cold)(_.compiles)},"warm_compiles":${slots(
+          warm)(_.compiles)},"errors":$errJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_FULL.json"), full + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }
     val head = LinkedHashMap.from(
-      headline.flatMap(n => cold.get(n).map(n -> _)))
+      headline.flatMap(n => cold.get(n).map(n -> _.secs)))
     println(
       s"""{"metric":"total","value":${math.rint(total * 100) / 100},"unit":"sec","n_queries":${names.size},"fixture_sec":${math.rint(fixtureSec * 100) / 100},"calib_sec":$calibJson,"calib_nominal":$calibNominal,"calib_io_sec":$calibIoJson,"calib_io_nominal":$calibIoNominal,"warm_total":${math
           .rint(warmTotal * 100) / 100},"adj_total":${math.rint(adjTotal * 100) / 100},"n_retried":${retry.size},"queries":${jmap(

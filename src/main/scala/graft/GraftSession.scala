@@ -62,7 +62,8 @@ object GraftSession {
       // default 100 entries thrashes under a 368-query bench — every
       // query evicts its predecessors' generated classes, so the warm
       // pass re-pays the full Janino compile bill (~30+ s/run; Bench
-      // logs the compile histogram). 4096 keeps every distinct codegen
+      // records each query's exact compile count, `Work.compiles`, in
+      // BENCH_FULL.json). 4096 keeps every distinct codegen
       // unit of the whole query surface resident; cost is metaspace
       // for generated classes only, and a long-lived production driver
       // wants exactly the same (repeated micro-batch plans recompiling

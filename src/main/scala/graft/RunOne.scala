@@ -4,7 +4,11 @@ package graft
   * full Bench sweep. Usage:
   *   runMain graft.RunOne <sfDir> <queryName> [queryName...]
   *   runMain graft.RunOne <sfDir> --top <N>
-  * Prints one line per query: name, rows, cold seconds, warm seconds.
+  * Prints one line per query: name, rows, cold and warm seconds, then
+  * the cold/warm [[Work]] counters — Spark jobs, exact codegen compiles
+  * and shuffle MB written. Any `spark.*` system property is applied
+  * over the [[GraftSession]] posture, so a `-Dspark.<key>=<value>` run
+  * A/Bs a conf without recompiling.
   *
   * `--top N` is the fresh-JVM adjudication mode: it reads the last
   * BENCH_FULL.json, picks the N queries with the heaviest recorded
@@ -32,23 +36,23 @@ object RunOne {
       case other => other
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder("graft-runone", cpus.toInt)
+    val b = GraftSession.builder("graft-runone", cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    sys.props.toSeq.filter(_._1.startsWith("spark."))
+      .foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.quietCheckpointNoise()
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      def pass(): (Long, Double) = {
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.operators.Dedup.releaseAll(spark)
-        (n, dt)
-      }
+      def pass() =
+        Work.measure(spark)(SparkEntry.queries(name)(spark, sfDir).count())
       val (rows, cold) = pass()
       val (_, warm) = pass()
-      println(f"[runone] $name rows=$rows cold=$cold%.2f warm=$warm%.2f")
+      println(f"[runone] $name rows=$rows cold=${cold.wallS}%.2f " +
+        f"warm=${warm.wallS}%.2f jobs=${cold.jobs}/${warm.jobs} " +
+        f"compiles=${cold.compiles}/${warm.compiles} " +
+        f"shuffle_mb=${cold.shuffleWriteBytes / 1048576.0}%.1f/" +
+        f"${warm.shuffleWriteBytes / 1048576.0}%.1f")
     }
     spark.stop()
   }

@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.VersionedTable
+import graft.streaming.BucketedState
 
 /** Scale-amplified smoke: materialize a K× corpus from an sf dir by
   * shifted-key unions into a SCRATCH dir (the read-only /root/testdata is
@@ -56,20 +59,43 @@ object ScaleSmoke {
       amped.write.mode("overwrite").parquet(s"$out/$tbl.parquet")
     }
 
-  /** Cumulative shuffle-WRITE bytes across completed stages — the
-    * exchange-volume readout next to wall time (a plan can look fast at
-    * K× while quietly shipping K² bytes; this column catches it). */
-  private[graft] class ShuffleAcc
-      extends org.apache.spark.scheduler.SparkListener {
-    @volatile var bytes = 0L
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-        : Unit =
-      bytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+  /** Bytes as MB — the probes print shuffle-WRITE volume next to wall
+    * time (a plan can look fast at K× while quietly shipping K² bytes;
+    * that column catches it). */
+  private[graft] def mb(bytes: Long): Double = bytes / 1048576.0
+
+  /** One measured streaming-gate micro-batch: `snk(inc, i)` under
+    * [[Work]], printed as `[tag] i incRows cumRows wall_s shuf_mb`, where
+    * cumRows counts the latest committed version at `outPath`. */
+  private[graft] def gateBatch(spark: SparkSession, tag: String,
+      snk: (DataFrame, Long) => Unit, inc: DataFrame, i: Int,
+      outPath: String): Unit = {
+    val incRows = inc.count()
+    val (_, w) = Work.measure(spark)(snk(inc, i.toLong))
+    val cum = VersionedTable.rowCount(spark, outPath,
+      VersionedTable.versions(spark, outPath).last)
+    println(f"[$tag] $i%5d $incRows%10d $cum%12d ${w.wallS}%8.2f " +
+      f"${mb(w.shuffleWriteBytes)}%9.1f")
   }
 
-  private[graft] def flush(spark: SparkSession): Unit =
-    org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
+  /** One measured MergeState-gate micro-batch, printed as
+    * `[tag] i incRows wall_s shuf_mb write_mb folds`: the tiered folds
+    * are the fold markers at `statePath` not in `seen` (a fold's write
+    * cost shows as its batch's write_mb). Returns the markers now
+    * present. */
+  private[graft] def foldBatch(spark: SparkSession, tag: String,
+      snk: (DataFrame, Long) => Unit, inc: DataFrame, i: Int,
+      statePath: String, seen: Set[BucketedState.Fold])
+      : Set[BucketedState.Fold] = {
+    val incRows = inc.count()
+    val (_, w) = Work.measure(spark)(snk(inc, i.toLong))
+    val now = BucketedState.foldMarkers(spark, statePath).toSet
+    val folds = (now -- seen).toSeq.sortBy(f => (f.level, f.start))
+      .map(f => s"L${f.level}[${f.start},${f.hi}]").mkString(" ")
+    println(f"[$tag] $i%5d $incRows%10d ${w.wallS}%8.2f " +
+      f"${mb(w.shuffleWriteBytes)}%9.1f ${mb(w.outputBytes)}%9.1f  $folds")
+    now
+  }
 
   /** Recursively delete a /tmp probe-state dir (one copy of the
     * recursive walk, with the same not-a-fixture-dir guard as
@@ -88,9 +114,6 @@ object ScaleSmoke {
   private[graft] def session(cpus: Int): SparkSession =
     GraftSession.builder("graft-scale-smoke", cpus)
       .config("spark.ui.enabled", "false")
-      // the nanos-typed events.parquet variant (see Tables.apply) would
-      // otherwise fail schema resolution on the raw read in amplify
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
 
   /** Amplify once per (src, K): the marker encodes both, so a re-run
@@ -119,20 +142,8 @@ object ScaleSmoke {
     val spark = session(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     ensureAmplified(spark, src, out, k)
-    val acc = new ShuffleAcc
-    spark.sparkContext.addSparkListener(acc)
-    def run(name: String, dir: String): (Long, Double, Long) = {
-      // deterministic listener flush (waitUntilEmpty) — a sleep can lose
-      // trailing stage events to the next row on a loaded machine
-      flush(spark)
-      val b0 = acc.bytes
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(name)(spark, dir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.operators.Dedup.releaseAll(spark)
-      flush(spark)
-      (rows, dt, acc.bytes - b0)
-    }
+    def run(name: String, dir: String): (Long, Work) =
+      Work.measure(spark)(SparkEntry.queries(name)(spark, dir).count())
     println(f"[scale] ${"query"}%-24s ${"rows1x"}%10s ${"rowsKx"}%12s " +
       f"${"t1x_s"}%8s ${"tKx_s"}%8s ${"ratio"}%7s " +
       f"${"shuf1x_mb"}%10s ${"shufKx_mb"}%10s")
@@ -143,10 +154,11 @@ object ScaleSmoke {
     names.foreach { name =>
       // 1× first: warms codegen for the plan shape, so the K× run is
       // measured JIT-warm and the ratio reflects data volume only
-      val (r1, t1, s1) = run(name, src)
-      val (rk, tk, sk) = run(name, out)
-      println(f"[scale] $name%-24s $r1%10d $rk%12d $t1%8.2f $tk%8.2f " +
-        f"${tk / t1}%7.1f ${s1 / 1048576.0}%10.1f ${sk / 1048576.0}%10.1f")
+      val (r1, w1) = run(name, src)
+      val (rk, wk) = run(name, out)
+      println(f"[scale] $name%-24s $r1%10d $rk%12d ${w1.wallS}%8.2f " +
+        f"${wk.wallS}%8.2f ${wk.wallS / w1.wallS}%7.1f " +
+        f"${mb(w1.shuffleWriteBytes)}%10.1f ${mb(wk.shuffleWriteBytes)}%10.1f")
     }
     spark.stop()
   }
@@ -193,18 +205,10 @@ object SubstrCleanScale {
     spark.sparkContext.setLogLevel("ERROR")
     val docs = saltedDocs(spark, src, k).persist()
     println(s"[clean] corpus: ${docs.count()} docs (K=$k salted copies)")
-    val acc = new ScaleSmoke.ShuffleAcc
-    spark.sparkContext.addSparkListener(acc)
-    def run(tag: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      ScaleSmoke.flush(spark)
-      val b0 = acc.bytes
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.operators.Dedup.releaseAll(spark)
-      ScaleSmoke.flush(spark)
-      println(f"[clean] $tag%-10s rows=$rows%10d wall=$dt%8.2f s " +
-        f"shuffle=${(acc.bytes - b0) / 1048576.0}%10.1f MB")
+    def run(tag: String)(df: DataFrame): Unit = {
+      val (rows, w) = Work.measure(spark)(df.count())
+      println(f"[clean] $tag%-10s rows=$rows%10d wall=${w.wallS}%8.2f s " +
+        f"shuffle=${ScaleSmoke.mb(w.shuffleWriteBytes)}%10.1f MB")
     }
     run("dense")(graft.operators.Dedup.duplicatedSubstrings(
       docs, "doc_id", "text", 30))
@@ -235,8 +239,6 @@ object SubstrGateScale {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     ScaleSmoke.ensureAmplified(spark, src, out, k)
-    val acc = new ScaleSmoke.ShuffleAcc
-    spark.sparkContext.addSparkListener(acc)
     val docs = spark.read.parquet(s"$out/documents.parquet")
     val base = s"/tmp/graft_sgate_scale_x$k"
     Seq("docs", "grams", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
@@ -252,29 +254,15 @@ object SubstrGateScale {
     println(f"[gate] ${"batch"}%5s ${"inc_rows"}%10s ${"cum_out"}%12s " +
       f"${"wall_s"}%8s ${"shuf_mb"}%9s")
     (0 until 3).foreach { i =>
-      val inc = docs.filter(pmod(col("doc_id"), lit(3L)) === i.toLong)
-      val incRows = inc.count()
-      ScaleSmoke.flush(spark)
-      val b0 = acc.bytes
-      val t0 = System.nanoTime()
-      snk(inc, i.toLong)
-      val dt = (System.nanoTime() - t0) / 1e9
-      ScaleSmoke.flush(spark)
-      val cum = graft.sources.VersionedTable.rowCount(spark,
-        s"${base}_out",
-        graft.sources.VersionedTable.versions(spark, s"${base}_out").last)
-      println(f"[gate] $i%5d $incRows%10d $cum%12d $dt%8.2f " +
-        f"${(acc.bytes - b0) / 1048576.0}%9.1f")
+      ScaleSmoke.gateBatch(spark, "gate", snk,
+        docs.filter(pmod(col("doc_id"), lit(3L)) === i.toLong), i,
+        s"${base}_out")
     }
     // K× parity: cumulative streamed runs == the one-shot operator
-    val t0 = System.nanoTime()
-    val oneShot = graft.operators.Dedup.duplicatedSubstrings(
-      docs, "doc_id", "text", minLen).count()
-    val dt = (System.nanoTime() - t0) / 1e9
-    graft.operators.Dedup.releaseAll(spark)
-    val streamed = graft.sources.VersionedTable
-      .read(spark, s"${base}_out").count()
-    println(f"[gate] one-shot $oneShot%d rows in $dt%.2f s; " +
+    val (oneShot, w) = Work.measure(spark)(graft.operators.Dedup
+      .duplicatedSubstrings(docs, "doc_id", "text", minLen).count())
+    val streamed = VersionedTable.read(spark, s"${base}_out").count()
+    println(f"[gate] one-shot $oneShot%d rows in ${w.wallS}%.2f s; " +
       f"streamed cumulative $streamed%d; match=${oneShot == streamed}")
     spark.stop()
   }
@@ -303,8 +291,6 @@ object SubstrGateCleanScale {
     spark.sparkContext.setLogLevel("ERROR")
     val docs = SubstrCleanScale.saltedDocs(spark, src, k).persist()
     println(s"[cgate] corpus: ${docs.count()} docs (K=$k salted copies)")
-    val acc = new ScaleSmoke.ShuffleAcc
-    spark.sparkContext.addSparkListener(acc)
     val base = s"/tmp/graft_cgate_scale_x$k"
     Seq("docs", "grams", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
     val snk = graft.streaming.SubstrGate.sink(s"${base}_docs",
@@ -313,28 +299,14 @@ object SubstrGateCleanScale {
     println(f"[cgate] ${"batch"}%5s ${"inc_rows"}%10s ${"cum_out"}%12s " +
       f"${"wall_s"}%8s ${"shuf_mb"}%9s")
     (0 until 3).foreach { i =>
-      val inc = docs.filter(pmod(col("doc_id"), lit(3L)) === i.toLong)
-      val incRows = inc.count()
-      ScaleSmoke.flush(spark)
-      val b0 = acc.bytes
-      val t0 = System.nanoTime()
-      snk(inc, i.toLong)
-      val dt = (System.nanoTime() - t0) / 1e9
-      ScaleSmoke.flush(spark)
-      val cum = graft.sources.VersionedTable.rowCount(spark,
-        s"${base}_out",
-        graft.sources.VersionedTable.versions(spark, s"${base}_out").last)
-      println(f"[cgate] $i%5d $incRows%10d $cum%12d $dt%8.2f " +
-        f"${(acc.bytes - b0) / 1048576.0}%9.1f")
+      ScaleSmoke.gateBatch(spark, "cgate", snk,
+        docs.filter(pmod(col("doc_id"), lit(3L)) === i.toLong), i,
+        s"${base}_out")
     }
-    val streamed = graft.sources.VersionedTable
-      .read(spark, s"${base}_out").count()
-    val t0 = System.nanoTime()
-    val oneShot = graft.operators.Dedup.duplicatedSubstrings(
-      docs, "doc_id", "text", minLen).count()
-    val dt = (System.nanoTime() - t0) / 1e9
-    graft.operators.Dedup.releaseAll(spark)
-    println(f"[cgate] one-shot $oneShot%d rows in $dt%.2f s; " +
+    val streamed = VersionedTable.read(spark, s"${base}_out").count()
+    val (oneShot, w) = Work.measure(spark)(graft.operators.Dedup
+      .duplicatedSubstrings(docs, "doc_id", "text", minLen).count())
+    println(f"[cgate] one-shot $oneShot%d rows in ${w.wallS}%.2f s; " +
       f"streamed cumulative $streamed%d; match=${oneShot == streamed}")
     docs.unpersist()
     spark.stop()
@@ -382,8 +354,6 @@ object SemGateScale {
         shifted.as("embedding"))
     }.reduce(_.unionAll(_)).persist()
     println(s"[sgate] corpus: ${vecs.count()} vectors (K=$k $mode)")
-    val acc = new ScaleSmoke.ShuffleAcc
-    spark.sparkContext.addSparkListener(acc)
     val root = s"/tmp/graft_semg_scale_${mode}_x$k"
     Seq("state", "out").foreach(p => ScaleSmoke.rmFixture(s"${root}_$p"))
     val snk = graft.streaming.SemGate.sink(s"${root}_state",
@@ -392,33 +362,18 @@ object SemGateScale {
     println(f"[sgate] ${"batch"}%5s ${"inc_rows"}%10s ${"cum_out"}%12s " +
       f"${"wall_s"}%8s ${"shuf_mb"}%9s")
     (0 until 3).foreach { i =>
-      val inc = vecs.filter(pmod(col("vec_id"), lit(3L)) === i.toLong)
-      val incRows = inc.count()
-      ScaleSmoke.flush(spark)
-      val b0 = acc.bytes
-      val t0 = System.nanoTime()
-      snk(inc, i.toLong)
-      val dt = (System.nanoTime() - t0) / 1e9
-      ScaleSmoke.flush(spark)
-      val cum = graft.sources.VersionedTable.rowCount(spark,
-        s"${root}_out",
-        graft.sources.VersionedTable.versions(spark, s"${root}_out").last)
-      println(f"[sgate] $i%5d $incRows%10d $cum%12d $dt%8.2f " +
-        f"${(acc.bytes - b0) / 1048576.0}%9.1f")
+      ScaleSmoke.gateBatch(spark, "sgate", snk,
+        vecs.filter(pmod(col("vec_id"), lit(3L)) === i.toLong), i,
+        s"${root}_out")
       if (roll && i == 1) {
         // mid-stream EPOCH ROLL (production SemDeDup's periodic
         // re-cluster): retrain on the accumulated state, re-encode,
         // emit the catch-up delta, flip — one bounded job, measured
-        ScaleSmoke.flush(spark)
-        val r0 = acc.bytes
-        val rt0 = System.nanoTime()
-        val e = graft.streaming.SemGate.rollEpoch(spark,
-          s"${root}_state", s"${root}_out", threshold = 0.35,
-          fromEpoch = 0, ncells = ncells, nBuckets = 64)
-        val rdt = (System.nanoTime() - rt0) / 1e9
-        ScaleSmoke.flush(spark)
-        println(f"[sgate] roll -> epoch $e%d in $rdt%8.2f s, " +
-          f"${(acc.bytes - r0) / 1048576.0}%9.1f MB shuffled")
+        val (e, w) = Work.measure(spark)(graft.streaming.SemGate.rollEpoch(
+          spark, s"${root}_state", s"${root}_out", threshold = 0.35,
+          fromEpoch = 0, ncells = ncells, nBuckets = 64))
+        println(f"[sgate] roll -> epoch $e%d in ${w.wallS}%8.2f s, " +
+          f"${ScaleSmoke.mb(w.shuffleWriteBytes)}%9.1f MB shuffled")
       }
     }
     // K× parity. Without a roll: cumulative streamed pairs == the
@@ -428,8 +383,7 @@ object SemGateScale {
     // the cross-epoch contract SemGateSpec pins at spec scale.
     val coarseVs = graft.sources.VersionedTable.versions(
       spark, s"${root}_state/coarse")
-    val t0 = System.nanoTime()
-    val (oneShot, streamed) =
+    val ((oneShot, streamed), w) = Work.measure(spark) {
       if (!roll) {
         val cent = graft.operators.Similarity.centFromFrame(
           graft.sources.VersionedTable.read(spark, s"${root}_state/coarse"))
@@ -454,9 +408,8 @@ object SemGateScale {
         (want, graft.sources.VersionedTable.read(spark, s"${root}_out")
           .select(col("id_a"), col("id_b")).distinct().count())
       }
-    val dt = (System.nanoTime() - t0) / 1e9
-    graft.operators.Dedup.releaseAll(spark)
-    println(f"[sgate] one-shot $oneShot%d pairs in $dt%.2f s; " +
+    }
+    println(f"[sgate] one-shot $oneShot%d pairs in ${w.wallS}%.2f s; " +
       f"streamed cumulative $streamed%d; match=${oneShot == streamed}")
     vecs.unpersist()
     spark.stop()
@@ -489,8 +442,6 @@ object SpatialGateScale {
       pmod(xxhash64(col("id"), lit(1)), lit(m)).as("x"),
       pmod(xxhash64(col("id"), lit(2)), lit(m)).as("y")).persist()
     println(s"[pgate] corpus: ${pts.count()} points (K=$k)")
-    val acc = new ScaleSmoke.ShuffleAcc
-    spark.sparkContext.addSparkListener(acc)
     val base = s"/tmp/graft_pgate_scale_x$k"
     Seq("state", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
     val snk = graft.streaming.SpatialGate.sink(s"${base}_state",
@@ -499,28 +450,14 @@ object SpatialGateScale {
     println(f"[pgate] ${"batch"}%5s ${"inc_rows"}%10s ${"cum_out"}%12s " +
       f"${"wall_s"}%8s ${"shuf_mb"}%9s")
     (0 until 3).foreach { i =>
-      val inc = pts.filter(pmod(col("id"), lit(3L)) === i.toLong)
-      val incRows = inc.count()
-      ScaleSmoke.flush(spark)
-      val b0 = acc.bytes
-      val t0 = System.nanoTime()
-      snk(inc, i.toLong)
-      val dt = (System.nanoTime() - t0) / 1e9
-      ScaleSmoke.flush(spark)
-      val cum = graft.sources.VersionedTable.rowCount(spark,
-        s"${base}_out",
-        graft.sources.VersionedTable.versions(spark, s"${base}_out").last)
-      println(f"[pgate] $i%5d $incRows%10d $cum%12d $dt%8.2f " +
-        f"${(acc.bytes - b0) / 1048576.0}%9.1f")
+      ScaleSmoke.gateBatch(spark, "pgate", snk,
+        pts.filter(pmod(col("id"), lit(3L)) === i.toLong), i,
+        s"${base}_out")
     }
-    val streamed = graft.sources.VersionedTable
-      .read(spark, s"${base}_out").count()
-    val t0 = System.nanoTime()
-    val oneShot = graft.operators.Spatial.radiusJoin(
-      pts, "id", "x", "y", 100L, 100L).count()
-    val dt = (System.nanoTime() - t0) / 1e9
-    graft.operators.Dedup.releaseAll(spark)
-    println(f"[pgate] one-shot $oneShot%d pairs in $dt%.2f s; " +
+    val streamed = VersionedTable.read(spark, s"${base}_out").count()
+    val (oneShot, w) = Work.measure(spark)(graft.operators.Spatial
+      .radiusJoin(pts, "id", "x", "y", 100L, 100L).count())
+    println(f"[pgate] one-shot $oneShot%d pairs in ${w.wallS}%.2f s; " +
       f"streamed cumulative $streamed%d; match=${oneShot == streamed}")
     pts.unpersist()
     spark.stop()
@@ -544,8 +481,6 @@ object ClusterGateScale {
     spark.sparkContext.setLogLevel("ERROR")
     val docs = SubstrCleanScale.saltedDocs(spark, src, k).persist()
     println(s"[lgate] corpus: ${docs.count()} docs (K=$k salted copies)")
-    val acc = new ScaleSmoke.ShuffleAcc
-    spark.sparkContext.addSparkListener(acc)
     val base = s"/tmp/graft_lgate_scale_x$k"
     Seq("labels", "idx").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
     val snk = graft.streaming.ClusterMaintainer.sink(s"${base}_labels",
@@ -553,37 +488,76 @@ object ClusterGateScale {
     println(f"[lgate] ${"batch"}%5s ${"inc_rows"}%10s ${"cum_lbl"}%12s " +
       f"${"wall_s"}%8s ${"shuf_mb"}%9s")
     (0 until 3).foreach { i =>
-      val inc = docs.filter(pmod(col("doc_id"), lit(3L)) === i.toLong)
-      val incRows = inc.count()
-      ScaleSmoke.flush(spark)
-      val b0 = acc.bytes
-      val t0 = System.nanoTime()
-      snk(inc, i.toLong)
-      val dt = (System.nanoTime() - t0) / 1e9
-      ScaleSmoke.flush(spark)
-      val cum = graft.sources.VersionedTable.rowCount(spark,
-        s"${base}_labels",
-        graft.sources.VersionedTable.versions(spark,
-          s"${base}_labels").last)
-      println(f"[lgate] $i%5d $incRows%10d $cum%12d $dt%8.2f " +
-        f"${(acc.bytes - b0) / 1048576.0}%9.1f")
+      ScaleSmoke.gateBatch(spark, "lgate", snk,
+        docs.filter(pmod(col("doc_id"), lit(3L)) === i.toLong), i,
+        s"${base}_labels")
     }
-    val got = graft.sources.VersionedTable.read(spark, s"${base}_labels")
+    val got = VersionedTable.read(spark, s"${base}_labels")
       .select(col("doc_id"), col("cluster"))
-    val sigs = graft.operators.Dedup.persistTracked(
-      graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text"))
-    val t0 = System.nanoTime()
-    val want = graft.operators.Dedup.clustersStar(
-      graft.operators.Dedup.candidatesFromSignatures(sigs, "doc_id")
-        .select(col("doc_a"), col("doc_b")), "doc_a", "doc_b")
-      .select(col("doc_a").as("doc_id"), col("cluster"))
-    val diff = got.exceptAll(want).count() + want.exceptAll(got).count()
-    val dt = (System.nanoTime() - t0) / 1e9
-    val wantN = want.count()
-    graft.operators.Dedup.releaseAll(spark)
-    println(f"[lgate] one-shot $wantN%d labels in $dt%.2f s; " +
+    val ((diff, wantN), w) = Work.measure(spark) {
+      val sigs = graft.operators.Dedup.persistTracked(
+        graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text"))
+      val want = graft.operators.Dedup.clustersStar(
+        graft.operators.Dedup.candidatesFromSignatures(sigs, "doc_id")
+          .select(col("doc_a"), col("doc_b")), "doc_a", "doc_b")
+        .select(col("doc_a").as("doc_id"), col("cluster"))
+      (got.exceptAll(want).count() + want.exceptAll(got).count(),
+        want.count())
+    }
+    println(f"[lgate] one-shot $wantN%d labels in ${w.wallS}%.2f s; " +
       f"label-set symmetric diff $diff%d; match=${diff == 0}")
     docs.unpersist()
+    spark.stop()
+  }
+}
+
+/** Decade ladder for the CUSUM changepoint gate's MergeState layout —
+  * the second MergeState gate (next to [[BoilerplateGateScale]]): K×
+  * salted events (the KEY is salted, so the state's keys × days grid
+  * grows with the corpus — the honest per-user-monitoring shape) over
+  * `nBatches` micro-batches with compactEvery=2, reporting per-batch
+  * wall / shuffle / write plus the fold events, then full parity
+  * against the one-shot `Events.cusumDaily` over the whole corpus.
+  * Run long enough (24 batches) to hit an L4 fold — the geometric
+  * signature at depth. Usage:
+  * `runMain graft.ChangepointGateScale [src] [K] [nBuckets] [nBatches]`. */
+object ChangepointGateScale {
+  def main(args: Array[String]): Unit = {
+    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val k = if (args.length > 1) args(1).toInt else 30
+    val nBuckets = if (args.length > 2) args(2).toInt else 32
+    val nBatches = if (args.length > 3) args(3).toInt else 24
+    val spark = ScaleSmoke.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.sparkContext.setLogLevel("ERROR")
+    val ev = graft.sources.Tables(spark, src, "events")
+      .crossJoin(spark.range(k).select(col("id").as("cp")))
+      .select((col("event_id") * k + col("cp")).as("event_id"),
+        concat(col("event_type"), lit("#"), col("cp")).as("event_type"),
+        col("ts"))
+      .persist()
+    println(s"[cpgate] corpus: ${ev.count()} events (K=$k salted keys)")
+    val base = s"/tmp/graft_cpgate_scale_x$k"
+    Seq("state", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
+    val snk = graft.streaming.ChangepointGate.sink(s"${base}_state",
+      s"${base}_out", "event_type", nBuckets = nBuckets,
+      compactEvery = 2)
+    println(f"[cpgate] ${"batch"}%5s ${"inc_rows"}%10s ${"wall_s"}%8s " +
+      f"${"shuf_mb"}%9s ${"write_mb"}%9s  folds")
+    (0 until nBatches).foldLeft(Set.empty[BucketedState.Fold]) {
+      (seen, i) =>
+      ScaleSmoke.foldBatch(spark, "cpgate", snk, ev.filter(
+        pmod(col("event_id"), lit(nBatches.toLong)) === i.toLong), i,
+        s"${base}_state", seen)
+    }
+    // parity: committed readout == one-shot CUSUM over the full corpus
+    val got = VersionedTable.read(spark, s"${base}_out")
+    val want = graft.operators.Events.cusumDaily(ev, "event_type")
+    val (diff, w) = Work.measure(spark)(
+      got.exceptAll(want).count() + want.exceptAll(got).count())
+    println(f"[cpgate] readout symmetric diff $diff%d " +
+      f"(one-shot in ${w.wallS}%.2f s); match=${diff == 0}")
+    ev.unpersist()
     spark.stop()
   }
 }
@@ -601,87 +575,8 @@ object ClusterGateScale {
   * arithmetic end to end), and every doc must appear in the output
   * exactly once. 4th arg = batch count (default 3; 12 shows the
   * multi-level cascade). */
-/** Decade ladder for the CUSUM changepoint gate's MergeState layout —
-  * the second MergeState gate (next to [[BoilerplateGateScale]]): K×
-  * salted events (the KEY is salted, so the state's keys × days grid
-  * grows with the corpus — the honest per-user-monitoring shape) over
-  * `nBatches` micro-batches with compactEvery=2, reporting per-batch
-  * wall / shuffle / write plus the fold events, then full parity
-  * against the one-shot `Events.cusumDaily` over the whole corpus.
-  * Run long enough (24 batches) to hit an L4 fold — the geometric
-  * signature at depth. Usage:
-  * `runMain graft.ChangepointGateScale [src] [K] [nBuckets] [nBatches]`. */
-object ChangepointGateScale {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val k = if (args.length > 1) args(1).toInt else 30
-    val nBuckets = if (args.length > 2) args(2).toInt else 32
-    val nBatches = if (args.length > 3) args(3).toInt else 24
-    val spark = ScaleSmoke.session(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("ERROR")
-    val ev = graft.sources.Tables(spark, src, "events")
-      .crossJoin(spark.range(k).select(col("id").as("cp")))
-      .select((col("event_id") * k + col("cp")).as("event_id"),
-        concat(col("event_type"), lit("#"), col("cp")).as("event_type"),
-        col("ts"))
-      .persist()
-    println(s"[cpgate] corpus: ${ev.count()} events (K=$k salted keys)")
-    val shuf = new ScaleSmoke.ShuffleAcc
-    val out = new java.util.concurrent.atomic.AtomicLong
-    val outAcc = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-          : Unit =
-        out.addAndGet(sc.stageInfo.taskMetrics.outputMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(shuf)
-    spark.sparkContext.addSparkListener(outAcc)
-    val base = s"/tmp/graft_cpgate_scale_x$k"
-    Seq("state", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
-    val snk = graft.streaming.ChangepointGate.sink(s"${base}_state",
-      s"${base}_out", "event_type", nBuckets = nBuckets,
-      compactEvery = 2)
-    println(f"[cpgate] ${"batch"}%5s ${"inc_rows"}%10s ${"wall_s"}%8s " +
-      f"${"shuf_mb"}%9s ${"write_mb"}%9s  folds")
-    var marks = Set.empty[graft.streaming.BucketedState.Fold]
-    (0 until nBatches).foreach { i =>
-      val inc = ev.filter(
-        pmod(col("event_id"), lit(nBatches.toLong)) === i.toLong)
-      val incRows = inc.count()
-      ScaleSmoke.flush(spark)
-      val (b0, w0) = (shuf.bytes, out.get())
-      val t0 = System.nanoTime()
-      snk(inc, i.toLong)
-      val dt = (System.nanoTime() - t0) / 1e9
-      ScaleSmoke.flush(spark)
-      val now = graft.streaming.BucketedState
-        .foldMarkers(spark, s"${base}_state").toSet
-      val folds = (now -- marks).toSeq.sortBy(f => (f.level, f.start))
-        .map(f => s"L${f.level}[${f.start},${f.hi}]").mkString(" ")
-      marks = now
-      println(f"[cpgate] $i%5d $incRows%10d $dt%8.2f " +
-        f"${(shuf.bytes - b0) / 1048576.0}%9.1f " +
-        f"${(out.get() - w0) / 1048576.0}%9.1f  $folds")
-    }
-    // parity: committed readout == one-shot CUSUM over the full corpus
-    val got = graft.sources.VersionedTable.read(spark, s"${base}_out")
-    val want = graft.operators.Events.cusumDaily(ev, "event_type")
-    val t0 = System.nanoTime()
-    val diff = got.exceptAll(want).count() + want.exceptAll(got).count()
-    val dt = (System.nanoTime() - t0) / 1e9
-    graft.operators.Dedup.releaseAll(spark)
-    println(f"[cpgate] readout symmetric diff $diff%d " +
-      f"(one-shot in $dt%.2f s); match=${diff == 0}")
-    ev.unpersist()
-    spark.stop()
-  }
-}
-
 object BoilerplateGateScale {
   def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 30
     val nBuckets = if (args.length > 2) args(2).toInt else 64
@@ -691,16 +586,6 @@ object BoilerplateGateScale {
     spark.sparkContext.setLogLevel("ERROR")
     val docs = SubstrCleanScale.saltedDocs(spark, src, k).persist()
     println(s"[bgate] corpus: ${docs.count()} docs (K=$k salted copies)")
-    val shuf = new ScaleSmoke.ShuffleAcc
-    val out = new java.util.concurrent.atomic.AtomicLong
-    val outAcc = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-          : Unit =
-        out.addAndGet(sc.stageInfo.taskMetrics.outputMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(shuf)
-    spark.sparkContext.addSparkListener(outAcc)
     val base = s"/tmp/graft_bgate_scale_x$k"
     Seq("freq", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
     val snk = graft.streaming.BoilerplateGate.sink(s"${base}_freq",
@@ -708,25 +593,11 @@ object BoilerplateGateScale {
       compactEvery = 2)
     println(f"[bgate] ${"batch"}%5s ${"inc_rows"}%10s ${"wall_s"}%8s " +
       f"${"shuf_mb"}%9s ${"write_mb"}%9s  folds")
-    var marks = Set.empty[graft.streaming.BucketedState.Fold]
-    (0 until nBatches).foreach { i =>
-      val inc = docs.filter(
-        pmod(col("doc_id"), lit(nBatches.toLong)) === i.toLong)
-      val incRows = inc.count()
-      ScaleSmoke.flush(spark)
-      val (b0, w0) = (shuf.bytes, out.get())
-      val t0 = System.nanoTime()
-      snk(inc, i.toLong)
-      val dt = (System.nanoTime() - t0) / 1e9
-      ScaleSmoke.flush(spark)
-      val now = graft.streaming.BucketedState
-        .foldMarkers(spark, s"${base}_freq").toSet
-      val folds = (now -- marks).toSeq.sortBy(f => (f.level, f.start))
-        .map(f => s"L${f.level}[${f.start},${f.hi}]").mkString(" ")
-      marks = now
-      println(f"[bgate] $i%5d $incRows%10d $dt%8.2f " +
-        f"${(shuf.bytes - b0) / 1048576.0}%9.1f " +
-        f"${(out.get() - w0) / 1048576.0}%9.1f  $folds")
+    (0 until nBatches).foldLeft(Set.empty[BucketedState.Fold]) {
+      (seen, i) =>
+      ScaleSmoke.foldBatch(spark, "bgate", snk, docs.filter(
+        pmod(col("doc_id"), lit(nBatches.toLong)) === i.toLong), i,
+        s"${base}_freq", seen)
     }
     // parity 1: merged frequency state == one-shot per-hash counts
     val got = graft.streaming.MergeState.readMerged(spark,
@@ -736,17 +607,14 @@ object BoilerplateGateScale {
         graft.functions.GraftFunctions.polyHash(col("chunk")).as("h"))
       .groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("ndocs"))
-    val t0 = System.nanoTime()
-    val diff = got.exceptAll(want).count() + want.exceptAll(got).count()
-    val dt = (System.nanoTime() - t0) / 1e9
+    val (diff, w) = Work.measure(spark)(
+      got.exceptAll(want).count() + want.exceptAll(got).count())
     // parity 2: one output row per doc
-    val outRows = graft.sources.VersionedTable
-      .read(spark, s"${base}_out").count()
+    val outRows = VersionedTable.read(spark, s"${base}_out").count()
     val nDocs = docs.count()
-    graft.operators.Dedup.releaseAll(spark)
-    println(f"[bgate] state symmetric diff $diff%d (one-shot in $dt%.2f s); " +
-      f"out rows $outRows%d vs $nDocs%d docs; " +
-      f"match=${diff == 0 && outRows == nDocs}")
+    println(f"[bgate] state symmetric diff $diff%d " +
+      f"(one-shot in ${w.wallS}%.2f s); out rows $outRows%d vs " +
+      f"$nDocs%d docs; match=${diff == 0 && outRows == nDocs}")
     docs.unpersist()
     spark.stop()
   }

@@ -32,12 +32,14 @@ object Tables {
     * MEMOIZED per (session, dir, name) — round 12: `spark.read.parquet`
     * re-infers the schema (a footer read + file listing) on EVERY call,
     * a fixed driver-side cost paid once or more per query slot, ~10-40
-    * ms × ~700 table loads across a bench run. The memo caches the
-    * LOGICAL PLAN only (an immutable frame over immutable test
-    * parquet): every action still scans the files, so nothing about
-    * query results or timing semantics changes — only the repeated
-    * schema inference goes. Keyed on the session identity so a test
-    * JVM with many short-lived sessions cannot cross-wire plans. */
+    * ms × ~700 table loads across a bench run. The memoized frame
+    * FREEZES the directory's file listing at first read: every action
+    * still scans those files, but files added, removed or rewritten
+    * afterwards are not seen (a removed file fails the scan). So only
+    * IMMUTABLE directories — the scale-factor test data — may be read
+    * through here; anything that changes in place must be read with
+    * `spark.read` directly. Keyed on the session identity so a test JVM
+    * with many short-lived sessions cannot cross-wire plans. */
   private val memo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), DataFrame]
 

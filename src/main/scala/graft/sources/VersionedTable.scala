@@ -275,7 +275,7 @@ object VersionedTable {
     * flip regressing compute-heavy mid-plan stages (q_basket_lift
     * 1.7→3.0 s — tiny tasks carrying real per-row work); a commit's
     * terminal write stage has no such downstream, so size-first is
-    * strictly right for it. Round 12 A/B (gates, TimeQ ×3 adjacent):
+    * strictly right for it. Round 12 A/B (gates, 3 adjacent runs per JVM):
     * sem 7.4→6.9, substr 4.6→4.2, boilerplate 3.4→3.0,
     * changepoint 3.5→3.1 s/run. Conf restored in finally: the prior
     * explicit setting, or unset when there was none (`getOption` would

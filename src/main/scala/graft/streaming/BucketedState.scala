@@ -421,8 +421,8 @@ object BucketedState {
   private def reRegister(spark: SparkSession, path: String,
       l: Layout): Unit = {
     val name = tableNameG(path, l.gen)
-    // a FRESH state registers before its first insert (appendOnce's
-    // static-partition path): MSCK needs the location to exist
+    // MSCK fails on a missing location: recreate the data dir when it
+    // was removed out-of-band while the batch markers survived
     fs(spark, path).mkdirs(dataDir(path, l.gen))
     spark.sql(s"""CREATE TABLE $name (${l.ddl}, __bt BIGINT)
       USING parquet

@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
-
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.athenaeum.SparkSpec
 import graft.sources.Tables
@@ -12,43 +8,26 @@ import graft.sources.Tables
 /** Pipeline observability without a second scan: `Dataset.observe`
   * attaches named aggregate metrics that are computed AS the job runs
   * (one pass — the 100 TB alternative to a separate count/quality job)
-  * and delivered to a QueryExecutionListener. The production shape:
-  * row counts and quality-gate tallies recorded on the write path
-  * itself, alerting fed from the listener.
+  * and delivered to a QueryExecutionListener ([[Work.observed]]). The
+  * production shape: row counts and quality-gate tallies recorded on
+  * the write path itself, alerting fed from the listener.
   */
 class ObservabilitySpec extends SparkSpec {
 
   test("observe() delivers row/null/sum metrics in the same pass") {
-    val seen = new ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = {
-        val m = qe.observedMetrics.get("ingest_metrics")
-        m.foreach(seen.add)
-      }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val orders = Tables(spark, "/root/testdata/sf0.001", "orders")
-      val observed = orders.observe("ingest_metrics",
-        count(lit(1)).as("n_rows"),
-        sum(when(col("o_totalprice") <= 0, 1L).otherwise(0L))
-          .as("n_nonpositive"),
-        max(col("o_orderkey")).as("max_key"))
-      val total = observed.count()
-      // listener delivery is async on the listener bus
-      var waited = 0
-      while (seen.isEmpty && waited < 100) {
-        TimeUnit.MILLISECONDS.sleep(50); waited += 1
-      }
-      assert(!seen.isEmpty, "observed metrics never delivered")
-      val m = seen.poll()
-      assert(m.getAs[Long]("n_rows") == total)
-      assert(m.getAs[Long]("n_nonpositive") == 0L)
-      assert(m.getAs[Long]("max_key") ==
-        orders.agg(max("o_orderkey")).head.getLong(0))
-    } finally spark.listenerManager.unregister(listener)
+    val orders = Tables(spark, "/root/testdata/sf0.001", "orders")
+    val observed = orders.observe("ingest_metrics",
+      count(lit(1)).as("n_rows"),
+      sum(when(col("o_totalprice") <= 0, 1L).otherwise(0L))
+        .as("n_nonpositive"),
+      max(col("o_orderkey")).as("max_key"))
+    val (total, work) = Work.measure(spark)(observed.count())
+    assert(work.observed.contains("ingest_metrics"),
+      "observed metrics never delivered")
+    val m = work.observed("ingest_metrics")
+    assert(m.getAs[Long]("n_rows") == total)
+    assert(m.getAs[Long]("n_nonpositive") == 0L)
+    assert(m.getAs[Long]("max_key") ==
+      orders.agg(max("o_orderkey")).head.getLong(0))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Work
 import graft.athenaeum.SparkSpec
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
@@ -192,21 +193,12 @@ class ShuffleBudgetSpec extends SparkSpec {
       pts, "id", "x", "y", 30L, 30L).count() // (id,id,dist2) raw longs
     assert(pairBytes > 1000L * 1000L,
       s"fixture not dense enough to be probative: $pairBytes")
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          acc.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Spatial.dbscan(pts, "id", "x", "y", eps = 30L, minPts = 5L).collect()
-      org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(acc.get() > 0, "listener saw no shuffle at all")
-    assert(acc.get() < pairBytes / 2,
-      s"dbscan shuffled ${acc.get()} bytes vs a $pairBytes-byte eps-graph")
+    val shuffled = Work.measure(spark)(Spatial.dbscan(
+      pts, "id", "x", "y", eps = 30L, minPts = 5L).collect())._2
+      .shuffleWriteBytes
+    assert(shuffled > 0, "listener saw no shuffle at all")
+    assert(shuffled < pairBytes / 2,
+      s"dbscan shuffled $shuffled bytes vs a $pairBytes-byte eps-graph")
   }
 
   test("sampled-anchor substring dedup shuffles a fraction of the dense operator") {
@@ -217,22 +209,8 @@ class ShuffleBudgetSpec extends SparkSpec {
     // operator's corpus-sized gram exchange. Listener-measured (both
     // operators persist subtrees shuffleProfile cannot see into).
     val docs = Tables(spark, dir, "documents")
-    def jobShuffle(body: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            acc.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      Dedup.releaseAll(spark)
-      acc.get()
-    }
+    def jobShuffle(body: => Unit): Long =
+      Work.measure(spark)(body)._2.shuffleWriteBytes
     val dense = jobShuffle(
       Dedup.duplicatedSubstrings(docs, "doc_id", "text", 30).collect())
     val sampled = jobShuffle(
@@ -277,30 +255,16 @@ class ShuffleBudgetSpec extends SparkSpec {
     * or partition-default drift across environments cannot move the
     * batch-to-batch ratios these assertions bound. */
   private def gateMetrics(body: => Unit): (Long, Long) = {
-    val shuffle = new java.util.concurrent.atomic.AtomicLong
-    val output = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          shuffle.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          output.addAndGet(t.taskMetrics.outputMetrics.bytesWritten)
-        }
-    }
     // accumulated state could never auto-broadcast at the scale these
     // claims are about — without the -1 threshold, a test-sized state
     // slips under the 10 MB threshold and a broken (bucketing-blind)
     // layout would pass by broadcasting what production must stream
-    withConf("spark.sql.adaptive.enabled" -> "false",
+    val work = withConf("spark.sql.adaptive.enabled" -> "false",
         "spark.sql.shuffle.partitions" -> "32",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      Work.measure(spark)(body)._2
     }
-    (shuffle.get(), output.get())
+    (work.shuffleWriteBytes, work.outputBytes)
   }
 
   test("boilerplate gate: per-batch WRITE volume tracks the increment's segments, not accumulated state") {

@@ -1,16 +1,12 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.athenaeum.SparkSpec
-import graft.operators.{Dedup, Spatial}
 
 /** The bucketed gates' serve-path PLAN contract as unit assertions: in
   * every executed per-batch query that scans gate state, the state-side
@@ -26,26 +22,9 @@ class GatePlanAuditSpec extends SparkSpec {
 
   /** Executed plans of every SQL execution `body` triggers (AQE off for
     * a stable, directly walkable plan tree). */
-  private def audited(body: => Unit): Seq[SparkPlan] = {
-    val buf = ArrayBuffer.empty[SparkPlan]
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        buf.synchronized { buf += qe.executedPlan; () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      spark.listenerManager.register(l)
-      try {
-        body
-        org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
-      } finally spark.listenerManager.unregister(l)
-    }
-    buf.synchronized { buf.toVector }
-  }
+  private def audited(body: => Unit): Seq[SparkPlan] =
+    withConf("spark.sql.adaptive.enabled" -> "false")(
+      graft.Work.measure(spark)(body)._2.plans)
 
   private def isStateScan(s: FileSourceScanExec, mark: String): Boolean =
     s.relation.location.rootPaths.exists(_.toString.contains(mark))
@@ -153,7 +132,6 @@ class GatePlanAuditSpec extends SparkSpec {
       "Exchange/Sort between the delta-run scan and the final merge " +
         s"aggregate (state must merge in place): " +
         offenders.map(_.nodeName).mkString(", "))
-    Dedup.releaseAll(spark)
   }
 
   test("substring gate serve path: both state scans bucketed, no exchange/sort above state") {
@@ -242,7 +220,6 @@ class GatePlanAuditSpec extends SparkSpec {
     assert(bad.isEmpty,
       "tombstone anti-join is not a broadcast: " +
         bad.map(_.nodeName).mkString(", "))
-    Dedup.releaseAll(spark)
   }
 
   test("semantic gate serve path: encoding and vector scans bucketed, no exchange/sort above state") {
@@ -262,6 +239,5 @@ class GatePlanAuditSpec extends SparkSpec {
     val plans = audited(snk(batch(1), 1L))
     audit(plans, s"$dir/state/enc", 8)
     audit(plans, s"$dir/state/vectors", 8)
-    Dedup.releaseAll(spark)
   }
 }

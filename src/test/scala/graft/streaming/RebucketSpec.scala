@@ -157,30 +157,17 @@ class RebucketSpec extends SparkSpec {
     // re-align path — the plan shows a 16-way hash exchange (honoring
     // the claim would skip it and break the one-file-per-bucket
     // layout accounting)
-    val plans = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.execution.SparkPlan]
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan; () }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      spark.listenerManager.register(l)
-      try {
+    val plans = withConf("spark.sql.adaptive.enabled" -> "false") {
+      graft.Work.measure(spark) {
         val stale = Seq((90L, vec(0, 7))).toDF("vec_id", "embedding")
           .select(col("vec_id").cast("long").as("id"),
             col("embedding").as("v"))
           .repartition(8, col("id"))
         BucketedState.appendOnce(stale, s"$statePath/vectors", 9L,
           "id", 8, prePartitioned = true)
-        org.apache.spark.sql.GraftSqlBridge.flushListeners(spark.sparkContext)
-      } finally spark.listenerManager.unregister(l)
+      }._2.plans
     }
-    val realigned = plans.synchronized(plans.toVector).exists(_.collect {
+    val realigned = plans.exists(_.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
         e.outputPartitioning match {
           case h: org.apache.spark.sql.catalyst.plans.physical
