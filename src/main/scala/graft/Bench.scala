@@ -34,8 +34,8 @@ import scala.collection.mutable.LinkedHashMap
   *
   * Noise controls: the WARM pass runs in a seeded-shuffled order — fixed
   * across runs (so warm totals are comparable run-to-run) but different
-  * from declaration order (so a query's warm cost is not a function of
-  * which caches/JIT state its declaration neighbors left behind). Per-query
+  * from the cold order (so a query's warm cost is not a function of
+  * which caches/JIT state its cold-pass neighbors left behind). Per-query
   * GC time ([[Work.gcMs]]) is emitted alongside the timings: an entry
   * whose wall clock spikes while its gc slot spikes too is late-JVM heap
   * pressure, not a plan regression.
@@ -280,13 +280,15 @@ object Bench {
     val calib0 = calibrate()
     val calibIo0 = calibrateIo()
     val names = SparkEntry.queries.keys.toSeq
-    // cold pass keeps declaration order (comparable to earlier rounds);
+    // cold pass runs in the key order of the immutable `queries` map: a
+    // function of the names' hashes alone, so it is the same in every run
+    // over the same query set, however the queries are declared;
     // warm pass uses a FIXED-seed shuffle — deterministic run-to-run
     val warmOrder = new scala.util.Random(42).shuffle(names)
     val cold = runPass(spark, sfDir, names, errors)
     val warm = runPass(spark, sfDir, warmOrder, errors)
     // self-adjudication: one re-measure for each cold outlier (>10x its
-    // warm and >1s), in declaration order — a one-off JIT/scheduler
+    // warm and >1s), in cold-pass order — a one-off JIT/scheduler
     // stall shows up as retry << cold inside the record itself
     val outliers = names.filter { n =>
       val c = cold(n).secs; val w = warm(n).secs

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.Shared.freshFixtureDir
 import graft.sources.VersionedTable
 import graft.streaming.BucketedState
 
@@ -95,20 +96,6 @@ object ScaleSmoke {
     println(f"[$tag] $i%5d $incRows%10d ${w.wallS}%8.2f " +
       f"${mb(w.shuffleWriteBytes)}%9.1f ${mb(w.outputBytes)}%9.1f  $folds")
     now
-  }
-
-  /** Recursively delete a /tmp probe-state dir (one copy of the
-    * recursive walk, with the same not-a-fixture-dir guard as
-    * SparkEntry.freshFixtureDir — probes must never point this at
-    * data). */
-  private[graft] def rmFixture(path: String): Unit = {
-    require(path.startsWith("/tmp/graft_"), s"not a fixture dir: $path")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
   }
 
   private[graft] def session(cpus: Int): SparkSession =
@@ -241,7 +228,7 @@ object SubstrGateScale {
     ScaleSmoke.ensureAmplified(spark, src, out, k)
     val docs = spark.read.parquet(s"$out/documents.parquet")
     val base = s"/tmp/graft_sgate_scale_x$k"
-    Seq("docs", "grams", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
+    Seq("docs", "grams", "out").foreach(p => freshFixtureDir(s"${base}_$p"))
     // bucket count sized for the probe's mega-increments (the
     // production sizing rule: a bucket's increment slice is the
     // shuffled-hash BUILD side and must fit in task memory — 50k-doc
@@ -292,7 +279,7 @@ object SubstrGateCleanScale {
     val docs = SubstrCleanScale.saltedDocs(spark, src, k).persist()
     println(s"[cgate] corpus: ${docs.count()} docs (K=$k salted copies)")
     val base = s"/tmp/graft_cgate_scale_x$k"
-    Seq("docs", "grams", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
+    Seq("docs", "grams", "out").foreach(p => freshFixtureDir(s"${base}_$p"))
     val snk = graft.streaming.SubstrGate.sink(s"${base}_docs",
       s"${base}_grams", s"${base}_out", "doc_id", "text", minLen,
       nBuckets = nBuckets)
@@ -355,7 +342,7 @@ object SemGateScale {
     }.reduce(_.unionAll(_)).persist()
     println(s"[sgate] corpus: ${vecs.count()} vectors (K=$k $mode)")
     val root = s"/tmp/graft_semg_scale_${mode}_x$k"
-    Seq("state", "out").foreach(p => ScaleSmoke.rmFixture(s"${root}_$p"))
+    Seq("state", "out").foreach(p => freshFixtureDir(s"${root}_$p"))
     val snk = graft.streaming.SemGate.sink(s"${root}_state",
       s"${root}_out", "vec_id", "embedding", threshold = 0.35,
       ncells = ncells, nBuckets = 64)
@@ -443,7 +430,7 @@ object SpatialGateScale {
       pmod(xxhash64(col("id"), lit(2)), lit(m)).as("y")).persist()
     println(s"[pgate] corpus: ${pts.count()} points (K=$k)")
     val base = s"/tmp/graft_pgate_scale_x$k"
-    Seq("state", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
+    Seq("state", "out").foreach(p => freshFixtureDir(s"${base}_$p"))
     val snk = graft.streaming.SpatialGate.sink(s"${base}_state",
       s"${base}_out", "id", "x", "y", radius = 100L, cell = 100L,
       nBuckets = nBuckets)
@@ -482,7 +469,7 @@ object ClusterGateScale {
     val docs = SubstrCleanScale.saltedDocs(spark, src, k).persist()
     println(s"[lgate] corpus: ${docs.count()} docs (K=$k salted copies)")
     val base = s"/tmp/graft_lgate_scale_x$k"
-    Seq("labels", "idx").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
+    Seq("labels", "idx").foreach(p => freshFixtureDir(s"${base}_$p"))
     val snk = graft.streaming.ClusterMaintainer.sink(s"${base}_labels",
       s"${base}_idx", "doc_id", "text", nBuckets = nBuckets)
     println(f"[lgate] ${"batch"}%5s ${"inc_rows"}%10s ${"cum_lbl"}%12s " +
@@ -538,7 +525,7 @@ object ChangepointGateScale {
       .persist()
     println(s"[cpgate] corpus: ${ev.count()} events (K=$k salted keys)")
     val base = s"/tmp/graft_cpgate_scale_x$k"
-    Seq("state", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
+    Seq("state", "out").foreach(p => freshFixtureDir(s"${base}_$p"))
     val snk = graft.streaming.ChangepointGate.sink(s"${base}_state",
       s"${base}_out", "event_type", nBuckets = nBuckets,
       compactEvery = 2)
@@ -587,7 +574,7 @@ object BoilerplateGateScale {
     val docs = SubstrCleanScale.saltedDocs(spark, src, k).persist()
     println(s"[bgate] corpus: ${docs.count()} docs (K=$k salted copies)")
     val base = s"/tmp/graft_bgate_scale_x$k"
-    Seq("freq", "out").foreach(p => ScaleSmoke.rmFixture(s"${base}_$p"))
+    Seq("freq", "out").foreach(p => freshFixtureDir(s"${base}_$p"))
     val snk = graft.streaming.BoilerplateGate.sink(s"${base}_freq",
       s"${base}_out", "doc_id", "text", nBuckets = nBuckets,
       compactEvery = 2)

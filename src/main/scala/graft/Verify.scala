@@ -10,6 +10,11 @@ object Verify {
     // the driver always calls with two args and gets the full sweep
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty,
+        s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder("graft-verify", cpus.toInt)
       .config("spark.ui.enabled", "false")

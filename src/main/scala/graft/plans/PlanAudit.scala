@@ -28,25 +28,4 @@ object PlanAudit {
         case _ => Nil
       }
       .groupBy(identity).map { case (p, xs) => p -> xs.size }
-
-  /** Dev audit main: print every query whose plan scans some relation at
-    * least `threshold` (default 3) times. Args: sfDir [threshold]. */
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val threshold = if (args.length > 1) args(1).toInt else 3
-    val spark = graft.GraftSession.builder("graft-plan-audit", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val hot = scanCounts(fn(spark, sfDir)).filter(_._2 >= threshold)
-        if (hot.nonEmpty)
-          println(s"AUDIT $name: " + hot.toSeq.sorted.map {
-            case (p, n) => s"$p x$n" }.mkString(", "))
-      } catch { case e: Throwable =>
-        println(s"AUDIT $name: PLAN FAILED ${e.getMessage}")
-      } finally graft.operators.Dedup.releaseAll(spark)
-    }
-    spark.stop()
-  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.athenaeum.SparkSpec
+import graft.queries.QuerySpec
 
 /** Executes EVERY SparkEntry query end-to-end on sf0.001 — the cheap
   * tripwire that keeps `sbt test` sufficient to catch a runtime break
@@ -13,27 +14,51 @@ class SmokeAllQueriesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  test("building a registry rejects a duplicate name or an empty oracle") {
+    // a map keyed by name silently keeps the LAST duplicate — a re-added
+    // name would shadow an existing query and its oracle, and the oracle
+    // sweep would still pass (against the wrong query)
+    val a = QuerySpec("q_a", (s, _) => s.range(1).toDF(), "SELECT 1")
+    val dup = intercept[IllegalArgumentException] {
+      QuerySpec.registry(Seq(a, QuerySpec("q_b", a.run, "SELECT 2"),
+        a.copy(oracle = "SELECT 3")))
+    }
+    assert(dup.getMessage.contains("duplicate query names: q_a"))
+    val empty = intercept[IllegalArgumentException] {
+      QuerySpec.registry(Seq(a, QuerySpec("q_c", a.run, "  ")))
+    }
+    assert(empty.getMessage.contains("empty oracle: q_c"))
+    assert(QuerySpec.registry(Seq(a)) == Seq(a))
+  }
+
   test("every query has an oracle and every oracle has a query") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert((q -- o).isEmpty, s"queries without oracle: ${(q -- o).toSeq.sorted}")
     assert((o -- q).isEmpty, s"oracles without query: ${(o -- q).toSeq.sorted}")
+    val blank = SparkEntry.oracleSql.collect { case (n, sql) if sql.trim.isEmpty => n }
+    assert(blank.isEmpty, s"empty oracles: ${blank.toSeq.sorted}")
   }
 
   test("no duplicate query keys in the SparkEntry source") {
-    // Map literals silently keep the LAST duplicate key — a re-added
-    // name would shadow an existing query in both maps and the oracle
-    // sweep would still pass (against the wrong query). Count each
-    // `"q..." ->` key in the source: exactly once per map, so exactly
-    // twice overall (queries + oracleSql).
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")))
-    val key = """"(q[0-9a-z_]+)"\s*->""".r
-    val counts = key.findAllMatchIn(src).map(_.group(1)).toSeq
-      .groupBy(identity).view.mapValues(_.size)
-    val dups = counts.filter(_._2 != 2).toSeq.sortBy(_._1)
-    assert(dups.isEmpty,
-      s"keys not appearing exactly twice (queries + oracleSql): $dups")
+    // Count each `QuerySpec("q...",` declaration across the family files:
+    // exactly once per name, and every declared name reaches SparkEntry
+    // (a spec left out of its family's `all` would never be run or checked).
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.list(
+      java.nio.file.Paths.get("src/main/scala/graft/queries")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val key = """QuerySpec\(\s*"(q[0-9a-z_]+)"""".r
+    val declared = files.flatMap { f =>
+      key.findAllMatchIn(new String(java.nio.file.Files.readAllBytes(f))).map(_.group(1))
+    }
+    val dups = declared.groupBy(identity).collect {
+      case (n, xs) if xs.size > 1 => n -> xs.size }.toSeq.sorted
+    assert(dups.isEmpty, s"query names declared more than once: $dups")
+    val reg = SparkEntry.queries.keySet
+    assert(declared.toSet == reg,
+      s"declared but not registered: ${(declared.toSet -- reg).toSeq.sorted}; " +
+        s"registered but not declared: ${(reg -- declared.toSet).toSeq.sorted}")
   }
 
   test("every query executes at sf0.001 (no runtime failures)") {

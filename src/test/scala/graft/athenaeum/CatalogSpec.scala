@@ -1,8 +1,11 @@
 package graft.athenaeum
 
+import graft.sources.AdventureWorksTables
+
 /** Catalog error surface (SURVEY §2.12: header/type/IO errors) plus the
   * AdventureWorks-scale smoke (SURVEY §5 item 5) over the reference's
-  * shipped 58-table corpus via the tablejson DataSourceV2. */
+  * shipped 58-table corpus via the tablejson DataSourceV2 (or its
+  * stand-in, [[AdventureWorksTables]]). */
 class CatalogSpec extends SparkSpec {
 
   private def writeTable(name: String, content: String): String = {
@@ -37,7 +40,7 @@ class CatalogSpec extends SparkSpec {
 
   test("AdventureWorks 3-way join at 19.9k rows per side (scale smoke)") {
     def load(n: String) = spark.read.format("tablejson")
-      .load(s"/root/reference/tables/$n.table.json")
+      .load(s"${AdventureWorksTables.dir}/$n.table.json")
     val phone = load("personPhone").as("ph")
     val email = load("emailAddress").as("em")
     val pwd = load("password").as("pw")
@@ -52,7 +55,7 @@ class CatalogSpec extends SparkSpec {
 
   test("AdventureWorks aggregation over a 19.8k-row table") {
     val customer = spark.read.format("tablejson")
-      .load("/root/reference/tables/customer.table.json")
+      .load(s"${AdventureWorksTables.dir}/customer.table.json")
     val byTerritory = customer.groupBy("territory_id").count().collect()
     assert(byTerritory.map(_.getLong(1)).sum == 19820L)
   }

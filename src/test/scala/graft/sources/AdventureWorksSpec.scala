@@ -4,14 +4,15 @@ import graft.athenaeum.SparkSpec
 
 /** Robustness sweep over the reference's LARGEST shipped workload: all 58
   * AdventureWorks `.table.json` files (~21 MB, 244k rows — see
-  * BASELINE.md). Every file must load through the DataSourceV2 with a
-  * parsed schema, scan cleanly (count + a per-column touch), and agree
-  * with the column-pruned read — catching format edge cases (hex blobs
-  * stored as str, empty strings, large ints, wide rows) the 16-row
-  * goldens can't. */
+  * BASELINE.md; [[AdventureWorksTables]] stands in for them where the
+  * reference tree is absent). Every file must load through the
+  * DataSourceV2 with a parsed schema, scan cleanly (count + a per-column
+  * touch), and agree with the column-pruned read — catching format edge
+  * cases (hex blobs stored as str, empty strings, large ints, wide rows)
+  * the 16-row goldens can't. */
 class AdventureWorksSpec extends SparkSpec {
 
-  private val dir = new java.io.File("/root/reference/tables")
+  private val dir = AdventureWorksTables.dir
 
   test("all 58 reference tables load, scan, and prune") {
     val files = dir.listFiles().filter(_.getName.endsWith(".table.json"))
@@ -90,7 +91,7 @@ class AdventureWorksSpec extends SparkSpec {
 
   test("spot-check values survive the int/str typing") {
     val addr = spark.read.format("tablejson")
-      .load("/root/reference/tables/address.table.json")
+      .load(s"$dir/address.table.json")
     assert(addr.filter("address_id IS NULL").count() == 0)
     val n = addr.count()
     assert(addr.select("address_id").distinct().count() == n)
