@@ -16,9 +16,10 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Dedup.releaseAll unpersists localCheckpoint blocks ON PURPOSE (the
-    * caches are dead between queries); Spark's "RDD was locally
-    * checkpointed, its lineage has been truncated" WARN is the expected
+  /** Dedup.scoped and Dedup.releaseAll unpersist localCheckpoint blocks
+    * ON PURPOSE (they are dead once the gate batch, epoch roll or query
+    * that tracked them ends); Spark's "RDD was locally checkpointed,
+    * its lineage has been truncated" WARN is the expected
     * consequence, and at 355+ queries it buries real signals in the
     * harness tail — silence that one logger, nothing broader. Call
     * AFTER `setLogLevel` (which re-applies the logging configuration

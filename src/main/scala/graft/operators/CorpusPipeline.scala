@@ -45,7 +45,7 @@ object CorpusPipeline {
 
     // persist: the survivor set feeds BOTH the near-dup candidate path
     // and the final select — without a barrier the whole scoring chain
-    // recomputes per consumer (caller-owned cache: Dedup.releaseCaches).
+    // recomputes per consumer (freed by the caller's Dedup.scoped).
     // The MinHash signature is computed HERE, while textCol is still in
     // scope, so candidate generation below reuses it instead of
     // re-joining docs and re-scanning the text (a full extra join+scan).

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
@@ -18,38 +19,31 @@ import graft.functions.XFormulas._
   */
 object Dedup {
 
-  // Every persist() below is registered here so long-lived sessions can
-  // release the cached signature blocks once the consuming action has
-  // run — without a barrier the blocks accumulate until eviction
-  // pressure. Callers own the lifecycle: run the action, then
-  // releaseCaches().
-  private val cached =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+  // One ordered registry of graft-owned intermediates: Left = a frame
+  // cached by persistTracked, Right = the RDD id of a checkpointTracked
+  // localCheckpoint. Without a release the blocks accumulate until
+  // eviction pressure. Library code frees what it tracked by running
+  // inside [[scoped]]; harnesses sweep everything between queries with
+  // [[releaseAll]]. One tracking thread per session: a scope closing on
+  // one thread frees whatever another thread registered meanwhile.
+  private val tracked =
+    scala.collection.mutable.ArrayBuffer.empty[Either[DataFrame, Int]]
 
-  /** Persist `df` and register it for [[releaseCaches]] — callers outside
-    * the operators (e.g. query definitions) share the same lifecycle. */
+  private def track(e: Either[DataFrame, Int]): Unit =
+    tracked.synchronized { tracked += e }
+
+  /** Persist `df` and register it for [[scoped]]/[[releaseAll]] —
+    * callers outside the operators (e.g. query definitions) share the
+    * same lifecycle. */
   def persistTracked(df: DataFrame): DataFrame = {
     val p = df.persist()
-    cached.add(p)
+    track(Left(p))
     p
   }
 
-  /** Unpersist every intermediate cached by the dedup operators since the
-    * last call (non-blocking). Safe to call any time after the consuming
-    * action; results already computed are unaffected. */
-  def releaseCaches(): Unit = {
-    var d = cached.poll()
-    while (d != null) { d.unpersist(blocking = false); d = cached.poll() }
-  }
-
-  // RDD ids of localCheckpoint blocks created through
-  // [[checkpointTracked]] — releaseAll sweeps ONLY these, never caches
-  // owned by user code sharing the session.
-  private val checkpointIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
-
-  /** `df.localCheckpoint()` with the resulting persistent-RDD ids
-    * recorded for [[releaseAll]]. Iterative operators (clusters,
+  /** `df.localCheckpoint()` with the checkpoint's RDD id, read from the
+    * `LogicalRDD` leaf of the returned frame, registered for
+    * [[scoped]]/[[releaseAll]]. Iterative operators (clusters,
     * PageRank) call this each round; without the registration the
     * checkpoint blocks accumulate across a long session until they
     * evict useful blocks and stall the executors in GC (measured: a
@@ -61,37 +55,48 @@ object Dedup {
     * FULL bench's warm pass degraded progressively with session age
     * (+50–120 s over 368 queries; late-pass deciles 1.5–2.3× baseline)
     * — a deferred checkpoint keeps its full lineage (and the shuffle
-    * state it references) live until materialization, and the sweep in
-    * [[releaseAll]] can then run before materialization ever happens.
-    * Eager keeps truncation and cleanup deterministic. Id capture
-    * diffs the context's persistent-RDD set around the (eager)
-    * checkpoint — under a concurrently-persisting foreign thread this
-    * can over-capture; graft's entry points build queries
-    * single-threaded. */
+    * state it references) live until materialization, and a release
+    * can then run before materialization ever happens. Eager keeps
+    * truncation and cleanup deterministic. */
   def checkpointTracked(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val cp = df.localCheckpoint()
-    (sc.getPersistentRDDs.keySet -- before).foreach(checkpointIds.add)
+    cp.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }
+      .foreach(id => track(Right(id)))
     cp
   }
 
-  /** Harness-grade cleanup between queries: [[releaseCaches]] PLUS the
-    * localCheckpoint blocks registered via [[checkpointTracked]].
-    * Scoped to graft-created state only — caches or checkpoints a user
-    * made on the shared session are never touched (unpersisting a
-    * still-referenced checkpoint would fail its reader with a
-    * missing-block error, since the truncated lineage cannot recompute).
+  /** Run `body`, then release exactly the caches and checkpoints
+    * registered while it ran, on every exit path (a throw then
+    * propagates). Entries registered before the scope opened, by the
+    * caller or an enclosing scope, are kept, so scopes nest. Only for
+    * state no reader needs after `body` returns: unpersisting a
+    * still-referenced checkpoint fails its reader with a missing-block
+    * error, since the truncated lineage cannot recompute. */
+  def scoped[T](spark: SparkSession)(body: => T): T = {
+    val mark = tracked.synchronized(tracked.length)
+    try body finally release(spark, mark)
+  }
+
+  /** Harness-grade sweep between queries: every tracked cache and
+    * checkpoint. Scoped to graft-created state only — caches or
+    * checkpoints a user made on the shared session are never touched.
     * Only for call sites where no earlier graft query's plan will be
     * re-executed. */
-  def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    releaseCaches()
-    val persistent = spark.sparkContext.getPersistentRDDs
-    val it = checkpointIds.iterator()
-    while (it.hasNext) {
-      val id = it.next()
-      persistent.get(id).foreach(_.unpersist(blocking = false))
-      it.remove()
+  def releaseAll(spark: SparkSession): Unit = release(spark, 0)
+
+  // unpersist (non-blocking) the entries from index `from` on; a
+  // releaseAll inside a scope may have emptied the registry below the
+  // scope's mark already
+  private def release(spark: SparkSession, from: Int): Unit = {
+    val gone = tracked.synchronized {
+      val g = tracked.drop(from)
+      tracked.dropRightInPlace(g.length)
+      g
+    }
+    lazy val persistent = spark.sparkContext.getPersistentRDDs
+    gone.foreach {
+      case Left(df) => df.unpersist(blocking = false)
+      case Right(id) => persistent.get(id).foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -673,9 +678,9 @@ object Dedup {
     // plan embeds the full upstream chain (scoring + LSH + all prior
     // rounds) and optimizer time grows super-linearly with rounds — the
     // label table is tiny (one row per paired doc), so materializing it
-    // is cheap. The checkpointed RDD blocks are released by Spark's
-    // ContextCleaner once the intermediate Datasets are GC'd (each round
-    // drops the reference to the previous one). On a cluster with flaky
+    // is cheap. The checkpointed RDD blocks are freed by the caller's
+    // scoped or releaseAll (or by Spark's ContextCleaner once a round's
+    // Dataset is GC'd, whichever comes first). On a cluster with flaky
     // executors use checkpoint() to durable storage instead.
     var labels = nodes.withColumn("label", col("id")).transform(checkpointTracked)
     for (_ <- 1 to rounds) {

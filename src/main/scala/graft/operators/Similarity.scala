@@ -189,7 +189,7 @@ object Similarity {
       ncells: Int = 8, iters: Int = 2): Array[Array[Double]] = {
     // persist: every Lloyd iteration (init + assignments) re-reads the
     // widened vectors; without the barrier each iteration re-scans the
-    // source. Caller-owned lifecycle via Dedup.releaseCaches.
+    // source. Freed by the caller's Dedup.scoped or releaseAll.
     val v = Dedup.persistTracked(vectors.select(col(idCol).as("vid"),
       expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("dv")))
     var cent: Array[Array[Double]] = v.orderBy("vid").limit(ncells)

@@ -39,6 +39,32 @@ object DedupQueries {
                   CAST(COUNT(*) + 29 AS BIGINT) AS len
            FROM r GROUP BY doc_a, doc_b, diag, isl)"""
 
+  // q_ingest_dedup and q_ingest_dedup2: increment x base LSH candidates
+  private val ingestDedupOracle =
+    s"""$minhashCtes
+           SELECT DISTINCT n.doc_id AS new_id, b.doc_id AS base_id,
+                  CAST(len(list_filter(list_transform(range(1, 13), i -> n.mh[i] = b.mh[i]), v -> v)) AS DOUBLE) / 12 AS est_jaccard
+           FROM (SELECT * FROM buckets WHERE doc_id % 10 = 0) n
+           JOIN (SELECT * FROM buckets WHERE doc_id % 10 <> 0) b
+             ON n.band = b.band AND n.bucket = b.bucket"""
+
+  // q_ingest_clusters, q_ingest_clusters2 and q_dedup_clusters_star: one
+  // connected-components labelling of the LSH candidate graph
+  private val ingestClustersOracle =
+    s"""WITH RECURSIVE ${minhashCtes.stripPrefix("WITH ")},
+           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                    FROM buckets a JOIN buckets b
+                      ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
+           edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
+                     UNION ALL SELECT doc_b AS src, doc_a AS dst FROM cand),
+           nodes AS (SELECT DISTINCT src AS id FROM edges),
+           reach AS (
+             SELECT id, id AS r FROM nodes
+             UNION
+             SELECT e.src AS id, reach.r FROM edges e
+             JOIN reach ON e.dst = reach.id)
+           SELECT id AS doc_id, MIN(r) AS cluster FROM reach GROUP BY id"""
+
   val all: Seq[QuerySpec] = Seq(
     // ----- dedup family -----
     QuerySpec("q_dedup_exact", (s, dir) =>
@@ -254,12 +280,7 @@ object DedupQueries {
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
         .select(col("new_id"), col("base_id"), col("est_jaccard"))
     },
-      s"""$minhashCtes
-           SELECT DISTINCT n.doc_id AS new_id, b.doc_id AS base_id,
-                  CAST(len(list_filter(list_transform(range(1, 13), i -> n.mh[i] = b.mh[i]), v -> v)) AS DOUBLE) / 12 AS est_jaccard
-           FROM (SELECT * FROM buckets WHERE doc_id % 10 = 0) n
-           JOIN (SELECT * FROM buckets WHERE doc_id % 10 <> 0) b
-             ON n.band = b.band AND n.bucket = b.bucket"""),
+      ingestDedupOracle),
 
     // the PERSISTED LSH base index itself: (doc, band, bucket) bucket
     // membership for the base corpus — the table an ingest pipeline
@@ -298,12 +319,7 @@ object DedupQueries {
     },
       // the stored-index roundtrip is value-preserving (longs through
       // parquet), so the oracle is the same join as q_ingest_dedup
-      s"""$minhashCtes
-           SELECT DISTINCT n.doc_id AS new_id, b.doc_id AS base_id,
-                  CAST(len(list_filter(list_transform(range(1, 13), i -> n.mh[i] = b.mh[i]), v -> v)) AS DOUBLE) / 12 AS est_jaccard
-           FROM (SELECT * FROM buckets WHERE doc_id % 10 = 0) n
-           JOIN (SELECT * FROM buckets WHERE doc_id % 10 <> 0) b
-             ON n.band = b.band AND n.bucket = b.bucket"""),
+      ingestDedupOracle),
 
     // VERSIONED LSH INDEX ingest: the base corpus's bucket table lives
     // in a versioned-snapshot table; each ingest joins a PINNED version,
@@ -376,19 +392,7 @@ object DedupQueries {
       // the incremental path must equal the FULL recompute: true CC
       // over the whole corpus's candidate graph (bucket membership is
       // per-doc, so base-base ∪ cross ∪ intra IS the full pair set)
-      s"""WITH RECURSIVE ${minhashCtes.stripPrefix("WITH ")},
-           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                    FROM buckets a JOIN buckets b
-                      ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-           edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                     UNION ALL SELECT doc_b AS src, doc_a AS dst FROM cand),
-           nodes AS (SELECT DISTINCT src AS id FROM edges),
-           reach AS (
-             SELECT id, id AS r FROM nodes
-             UNION
-             SELECT e.src AS id, reach.r FROM edges e
-             JOIN reach ON e.dst = reach.id)
-           SELECT id AS doc_id, MIN(r) AS cluster FROM reach GROUP BY id"""),
+      ingestClustersOracle),
 
     // the PRODUCTION LOOP, two nights of it: increment A folds into the
     // stored labels, the result COMMITS as a VersionedTable snapshot,
@@ -425,19 +429,7 @@ object DedupQueries {
     },
       // iterated incremental + a VersionedTable hop must still equal
       // the one-shot full recompute
-      s"""WITH RECURSIVE ${minhashCtes.stripPrefix("WITH ")},
-           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                    FROM buckets a JOIN buckets b
-                      ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-           edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                     UNION ALL SELECT doc_b AS src, doc_a AS dst FROM cand),
-           nodes AS (SELECT DISTINCT src AS id FROM edges),
-           reach AS (
-             SELECT id, id AS r FROM nodes
-             UNION
-             SELECT e.src AS id, reach.r FROM edges e
-             JOIN reach ON e.dst = reach.id)
-           SELECT id AS doc_id, MIN(r) AS cluster FROM reach GROUP BY id"""),
+      ingestClustersOracle),
 
     // containment (|A∩B|/|A|) on the LSH candidates: catches short docs
     // embedded in longer ones, which symmetric Jaccard dilutes away
@@ -1071,19 +1063,7 @@ object DedupQueries {
       // TRUE connected components via recursive reachability closure
       // (min reachable node per node) — star contraction's exact target,
       // independent of any round count.
-      s"""WITH RECURSIVE ${minhashCtes.stripPrefix("WITH ")},
-           cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                    FROM buckets a JOIN buckets b
-                      ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-           edges AS (SELECT doc_a AS src, doc_b AS dst FROM cand
-                     UNION ALL SELECT doc_b AS src, doc_a AS dst FROM cand),
-           nodes AS (SELECT DISTINCT src AS id FROM edges),
-           reach AS (
-             SELECT id, id AS r FROM nodes
-             UNION
-             SELECT e.src AS id, reach.r FROM edges e
-             JOIN reach ON e.dst = reach.id)
-           SELECT id AS doc_id, MIN(r) AS cluster FROM reach GROUP BY id"""),
+      ingestClustersOracle),
 
     // ----- LSH self-evaluation: measure the banding scheme's candidate
     // quality against the EXACT prefix-filter join (which is provably

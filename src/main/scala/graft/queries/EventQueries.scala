@@ -45,26 +45,7 @@ object EventQueries {
     // never over raw events and never globally -----
     QuerySpec("q_cusum", (s, dir) =>
       Events.cusumDaily(t(s, dir, "events"), "event_type"),
-      // CUSUM in scaled BIGINTs: dev_fx = D*cum - idx*total ==
-      // D * sum_{i<=idx}(n_i - total/D), no float mean anywhere
-      """WITH d AS (SELECT event_type,
-                    epoch_us(ts) // 86400000000 AS day,
-                    CAST(COUNT(*) AS BIGINT) AS n
-             FROM events GROUP BY 1, 2),
-           w AS (SELECT event_type, day, n,
-                    COUNT(*) OVER (PARTITION BY event_type) AS dd,
-                    SUM(n) OVER (PARTITION BY event_type) AS total,
-                    SUM(n) OVER (PARTITION BY event_type
-                                 ORDER BY day) AS cum,
-                    ROW_NUMBER() OVER (PARTITION BY event_type
-                                       ORDER BY day) AS idx
-                 FROM d)
-           SELECT event_type, day, n,
-                  CAST(dd * cum - idx * total AS BIGINT) AS dev_fx,
-                  abs(dd * cum - idx * total) =
-                    MAX(abs(dd * cum - idx * total))
-                      OVER (PARTITION BY event_type) AS is_peak
-           FROM w"""),
+      cusumOracle),
 
     // ----- as-of join (custom operator; Spark has no built-in) -----
     QuerySpec("q_asof_join", (s, dir) => {

@@ -336,24 +336,7 @@ object GateQueries {
       snk(ev.filter(col("event_id") % 3 === 2), 2L)
       graft.sources.VersionedTable.read(s, paths(1))
     },
-      """WITH d AS (SELECT event_type,
-                    epoch_us(ts) // 86400000000 AS day,
-                    CAST(COUNT(*) AS BIGINT) AS n
-             FROM events GROUP BY 1, 2),
-           w AS (SELECT event_type, day, n,
-                    COUNT(*) OVER (PARTITION BY event_type) AS dd,
-                    SUM(n) OVER (PARTITION BY event_type) AS total,
-                    SUM(n) OVER (PARTITION BY event_type
-                                 ORDER BY day) AS cum,
-                    ROW_NUMBER() OVER (PARTITION BY event_type
-                                       ORDER BY day) AS idx
-                 FROM d)
-           SELECT event_type, day, n,
-                  CAST(dd * cum - idx * total AS BIGINT) AS dev_fx,
-                  abs(dd * cum - idx * total) =
-                    MAX(abs(dd * cum - idx * total))
-                      OVER (PARTITION BY event_type) AS is_peak
-           FROM w"""),
+      cusumOracle),
 
     // ----- the CUSUM gate with a TAKEDOWN mid-stream — the MergeState
     // retraction (negative delta on the additive CRDT): two event

@@ -33,6 +33,21 @@ object RelationalQueries {
                   COUNT(*) AS n
            FROM lineitem GROUP BY l_linestatus""")
 
+  // q_range_join and q_range_join_auto: one abs-tolerance theta join,
+  // bucketed by hand or by BucketedRangeJoinRule
+  private val rangeJoinOracle =
+    """SELECT p_brand, COUNT(*) AS n_pairs
+         FROM lineitem JOIN part ON abs(l_quantity - p_size) <= 2
+         GROUP BY p_brand"""
+
+  // q_topk_group and q_topk_group_window: one top-k per group
+  private val topkGroupOracle =
+    """SELECT l_partkey, l_orderkey, l_linenumber, rn FROM (
+             SELECT l_partkey, l_orderkey, l_linenumber,
+                    ROW_NUMBER() OVER (PARTITION BY l_partkey
+                      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
+             FROM lineitem) WHERE rn <= 2"""
+
   val all: Seq[QuerySpec] = Seq(
     // ----- S1 scan + P1/P2 projection with alias (database.py:231-263) -----
     QuerySpec("q_scan_project", (s, dir) =>
@@ -151,9 +166,7 @@ object RelationalQueries {
         .groupBy(col("p_brand"))
         .agg(sum(col("cnt_l") * col("cnt_p")).as("n_pairs"))
     },
-      """SELECT p_brand, COUNT(*) AS n_pairs
-         FROM lineitem JOIN part ON abs(l_quantity - p_size) <= 2
-         GROUP BY p_brand"""),
+      rangeJoinOracle),
 
     // same query through the OPTIMIZER RULE: a naive abs-tolerance theta
     // join that BucketedRangeJoinRule rewrites to the bucketed equi join
@@ -169,9 +182,7 @@ object RelationalQueries {
         .groupBy(col("p_brand"))
         .agg(sum(col("cnt_l") * col("cnt_p")).as("n_pairs"))
     },
-      """SELECT p_brand, COUNT(*) AS n_pairs
-         FROM lineitem JOIN part ON abs(l_quantity - p_size) <= 2
-         GROUP BY p_brand"""),
+      rangeJoinOracle),
 
     // the rule's asymmetric BETWEEN band form: quantity within
     // [size - 1, size + 3] — auto-rewritten to the same bucketed equi
@@ -928,11 +939,7 @@ object RelationalQueries {
         .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
           col("rn"))
     },
-      """SELECT l_partkey, l_orderkey, l_linenumber, rn FROM (
-             SELECT l_partkey, l_orderkey, l_linenumber,
-                    ROW_NUMBER() OVER (PARTITION BY l_partkey
-                      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-             FROM lineitem) WHERE rn <= 2"""),
+      topkGroupOracle),
 
     // ----- TPC-H Q4-style: order priority with a conditioned EXISTS -----
     QuerySpec("q4_order_priority", (s, dir) => {
@@ -1632,11 +1639,7 @@ object RelationalQueries {
         .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
           col("rn"))
     },
-      """SELECT l_partkey, l_orderkey, l_linenumber, rn FROM (
-             SELECT l_partkey, l_orderkey, l_linenumber,
-                    ROW_NUMBER() OVER (PARTITION BY l_partkey
-                      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-             FROM lineitem) WHERE rn <= 2"""),
+      topkGroupOracle),
 
     // ----- max_by/arg_max with a deterministic composite tie-break -----
     QuerySpec("q_argmax", (s, dir) => {

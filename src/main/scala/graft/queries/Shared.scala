@@ -91,6 +91,29 @@ object Shared {
          WHERE (a.x - b.x) * (a.x - b.x)
              + (a.y - b.y) * (a.y - b.y) <= 625"""
 
+  // the daily CUSUM truth in scaled BIGINTs: dev_fx = D*cum - idx*total
+  // == D * sum_{i<=idx}(n_i - total/D), no float mean anywhere (the
+  // q_cusum oracle; the streaming changepoint gate must reproduce it too)
+  private[queries] val cusumOracle =
+    """WITH d AS (SELECT event_type,
+                    epoch_us(ts) // 86400000000 AS day,
+                    CAST(COUNT(*) AS BIGINT) AS n
+             FROM events GROUP BY 1, 2),
+           w AS (SELECT event_type, day, n,
+                    COUNT(*) OVER (PARTITION BY event_type) AS dd,
+                    SUM(n) OVER (PARTITION BY event_type) AS total,
+                    SUM(n) OVER (PARTITION BY event_type
+                                 ORDER BY day) AS cum,
+                    ROW_NUMBER() OVER (PARTITION BY event_type
+                                       ORDER BY day) AS idx
+                 FROM d)
+           SELECT event_type, day, n,
+                  CAST(dd * cum - idx * total AS BIGINT) AS dev_fx,
+                  abs(dd * cum - idx * total) =
+                    MAX(abs(dd * cum - idx * total))
+                      OVER (PARTITION BY event_type) AS is_peak
+           FROM w"""
+
   // naive-scan exact-substring truth: ALL 30-grams of every doc,
   // matched by content, grouped into maximal diagonal runs — the
   // brute formulation of Dedup.duplicatedSubstrings' reduction.

@@ -11,12 +11,13 @@ import graft.sources.VersionedTable
   * contract before, and a sixth gate could get the replay pinning
   * subtly wrong. The contract: (1) the OUTPUT commit is the batch's
   * completion marker ([[runOnce]] skips committed re-deliveries and
-  * sweeps caches on every exit); (2) cross joins against append-mode
-  * state see the table as it stood BEFORE the batch's own append
-  * ([[pinnedBefore]] — reading latest on a replay whose append landed
-  * would pair the increment against its own replayed rows,
-  * double-reporting intra results as cross results or pushing capped
-  * candidate buckets over their cap and DROPPING genuine pairs);
+  * frees the batch's own tracked blocks on every exit); (2) cross
+  * joins against append-mode state see the table as it stood BEFORE
+  * the batch's own append ([[pinnedBefore]] — reading latest on a
+  * replay whose append landed would pair the increment against its
+  * own replayed rows, double-reporting intra results as cross results
+  * or pushing capped candidate buckets over their cap and DROPPING
+  * genuine pairs);
   * (3) state commits land before the output commit, each idempotent
   * per batch id ([[VersionedTable.streamingCommit]] for versioned
   * state, [[MergeState.appendDelta]]/[[BucketedState.appendOnce]] for
@@ -26,14 +27,13 @@ import graft.sources.VersionedTable
 object GateKit {
 
   /** Run `body` only if `batchId` has not yet committed to `outPath`
-    * (the completion marker), sweeping tracked caches and
-    * localCheckpoint blocks on every exit path. */
+    * (the completion marker), as one [[Dedup.scoped]] unit: on every
+    * exit path it frees the caches and localCheckpoint blocks the batch
+    * tracked, and only those. */
   def runOnce(spark: SparkSession, outPath: String, batchId: Long)(
       body: => Unit): Unit =
     if (!VersionedTable.committedBatches(spark, outPath)
-        .contains(batchId)) {
-      try body finally Dedup.releaseCaches()
-    }
+        .contains(batchId)) Dedup.scoped(spark)(body)
 
   /** The version of `path` as it stood BEFORE this batch's own append —
     * latest on the fresh path; on a replay whose append already landed

@@ -293,7 +293,7 @@ object SemGate {
     // appending mid-roll fails fast instead of racing the re-encode
     BucketedState.withMaintenanceLease(spark, vecPath) {
     BucketedState.withMaintenanceLease(spark, sub(statePath, "enc", cur)) {
-    try {
+    Dedup.scoped(spark) {
       // SERVED vectors: a roll re-encodes only the un-forgotten state,
       // so the epoch flip doubles as the semantic gate's physical purge
       val allVecs = BucketedState
@@ -390,8 +390,7 @@ object SemGate {
         VersionedTable.commit(
           Similarity.centToFrame(spark, cent1), coarsePath)
       next
-    } finally Dedup.releaseCaches()
-    } }
+    } } }
   }
 
   /** FORGET vectors — the semantic gate's takedown: tombstone the ids
@@ -456,8 +455,8 @@ object SemGate {
     // multiple consumers (the per-epoch anti-joins + the tail), and the
     // snapshots' files are a subset of the table's — without the
     // barriers every output file is scanned once per consumer
-    // (PlanHygieneSpec's multi-scan guard catches it). Caller releases
-    // via Dedup.releaseAll, the library-wide cache lifecycle.
+    // (PlanHygieneSpec's multi-scan guard catches it). The caller's
+    // Dedup.scoped (or a harness's releaseAll) frees them.
     val all = Dedup.persistTracked(VersionedTable.read(spark, outPath))
     // walk epochs oldest-first: what a boundary snapshot contains and
     // earlier epochs did not, that epoch emitted

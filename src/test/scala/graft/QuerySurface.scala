@@ -27,8 +27,9 @@ object QuerySurface {
   /** @param audit    the plan audits, or the error that building or
     *                 planning the query failed with
     * @param runError the error executing the query failed with, if any
-    * @param drift    session state the query left changed: conf keys and
-    *                 `spark.experimental` optimizations/strategies */
+    * @param drift    session state the query left changed: conf keys,
+    *                 `spark.experimental` optimizations/strategies and
+    *                 persisted RDDs left after the release */
   final case class Record(audit: Either[String, Audit],
       runError: Option[String], drift: Seq[String])
 
@@ -79,7 +80,8 @@ object QuerySurface {
   private def sessionState(spark: SparkSession): Map[String, Any] =
     spark.conf.getAll.map { case (k, v) => s"conf $k" -> v } ++ Map(
       "extraOptimizations" -> spark.experimental.extraOptimizations,
-      "extraStrategies" -> spark.experimental.extraStrategies)
+      "extraStrategies" -> spark.experimental.extraStrategies,
+      "persistent RDDs" -> spark.sparkContext.getPersistentRDDs.keySet)
 
   private def drift(a: Map[String, Any], b: Map[String, Any]): Seq[String] =
     (a.keySet ++ b.keySet).toSeq.sorted.collect {

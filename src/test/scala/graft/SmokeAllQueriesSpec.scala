@@ -69,8 +69,9 @@ class SmokeAllQueriesSpec extends SparkSpec {
   }
 
   test("building and running a query leaves the session conf and planner hooks unchanged") {
-    // a query that flips a conf or appends an experimental rule/strategy
-    // changes every later query planned on the same session
+    // a query that flips a conf, appends an experimental rule/strategy
+    // or leaves a block persisted after its release changes every later
+    // query planned on the same session
     val drifted = QuerySurface.at(spark, dir).collect {
       case (name, r) if r.drift.nonEmpty => s"$name: ${r.drift.mkString("; ")}"
     }

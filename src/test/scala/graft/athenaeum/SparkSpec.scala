@@ -5,12 +5,18 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Every test ends with the harness sweep of graft's tracked caches
+    * and checkpoints, on the session if one was started. */
+  override protected def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally SparkSession.getDefaultSession.foreach(graft.operators.Dedup.releaseAll)
 
   /** Run `f` with each `key -> value` set on the session, then put back
     * what was there: the prior explicit value, or no setting at all. */

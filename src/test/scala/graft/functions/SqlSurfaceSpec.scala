@@ -52,7 +52,6 @@ class SqlSurfaceSpec extends SparkSpec {
       Tables(spark, dir, "documents"), "doc_id", "text")
       .select(col("doc_a"), col("doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
     assert(sql == df,
       s"only-sql=${(sql -- df).take(5)} only-df=${(df -- sql).take(5)}")
   }
@@ -78,7 +77,6 @@ class SqlSurfaceSpec extends SparkSpec {
       Tables(spark, dir, "documents"), "doc_id", "text", n = 6)
       .select(col("doc_a"), col("doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
     assert(sql == df,
       s"only-sql=${(sql -- df).take(5)} only-df=${(df -- sql).take(5)}")
   }

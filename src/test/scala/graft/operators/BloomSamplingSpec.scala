@@ -121,7 +121,6 @@ class BloomSamplingSpec extends SparkSpec {
       s"near-dup pairs across splits: ${straddle.take(5).mkString(", ")}")
     // and the buckets actually partition: every doc got exactly one split
     assert(splitOf.size == docs.count())
-    Dedup.releaseCaches()
   }
 
   test("novelty filter == plain anti join; bloom short-circuit prunes the join input") {
@@ -178,7 +177,6 @@ class BloomSamplingSpec extends SparkSpec {
     }
     // multi-doc clusters exist in the fixture, so soft dedup is non-trivial
     assert(perRep.exists(_.getLong(2) > 1))
-    Dedup.releaseCaches()
   }
 
   test("quality sample: head tercile keeps 100%, overall a strict subset") {
@@ -191,7 +189,6 @@ class BloomSamplingSpec extends SparkSpec {
     }
     val (k, t) = (r.map(_._3).sum, r.map(_._4).sum)
     assert(k < t, s"sampling kept everything: $k/$t")
-    Dedup.releaseCaches()
   }
 
   test("lm doc scores: probabilities in (0,1], short docs absent") {
@@ -204,6 +201,5 @@ class BloomSamplingSpec extends SparkSpec {
     val b = TextAnalysis.bigramDocScores(docs, "doc_id", "text")
       .orderBy("doc_id").collect().map(_.toSeq)
     assert(a.sameElements(b))
-    Dedup.releaseCaches()
   }
 }

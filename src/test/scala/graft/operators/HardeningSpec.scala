@@ -1,13 +1,15 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 import graft.athenaeum.SparkSpec
 
 /** Public-surface hardening contracts: the cache sweep is scoped to
-  * graft-owned state, and profile() fails fast on an empty column list
-  * (both were judge findings — each gets a pinned spec so the contract
-  * cannot silently regress).
+  * graft-owned state, a [[Dedup.scoped]] unit frees exactly what it
+  * tracked, and profile() fails fast on an empty column list — each
+  * gets a pinned spec so the contract cannot silently regress.
   */
 class HardeningSpec extends SparkSpec {
 
@@ -21,10 +23,16 @@ class HardeningSpec extends SparkSpec {
     // graft-owned state created through the tracked entry points
     val tracked = Dedup.persistTracked((1L to 5L).toDF("z"))
     assert(tracked.count() == 5)
-    val trackedCp = Dedup.checkpointTracked((1L to 3L).toDF("w"))
+    val (trackedCp, trackedCpIds) =
+      newPersistentIds(Dedup.checkpointTracked((1L to 3L).toDF("w")))
     assert(trackedCp.count() == 3)
 
     Dedup.releaseAll(spark)
+
+    // graft's own state is gone
+    assert(tracked.storageLevel == StorageLevel.NONE)
+    assert(trackedCpIds.nonEmpty &&
+      trackedCpIds.forall(id => !persistentIds().contains(id)))
 
     // the user's cache is still materialized and still readable — an
     // over-broad sweep would have killed the checkpoint's blocks and any
@@ -36,6 +44,56 @@ class HardeningSpec extends SparkSpec {
     assert(userCp.count() == 7, "user localCheckpoint must survive releaseAll")
 
     userCache.unpersist()
+  }
+
+  test("scoped frees exactly what its body tracked: scopes nest, a throw still releases") {
+    import spark.implicits._
+    var inner: DataFrame = null
+    var innerCpIds = Set.empty[Int]
+    Dedup.scoped(spark) {
+      val outer = Dedup.persistTracked((1L to 6L).toDF("a"))
+      assert(outer.count() == 6)
+      val (outerCp, outerCpIds) =
+        newPersistentIds(Dedup.checkpointTracked((1L to 4L).toDF("b")))
+      assert(outerCp.count() == 4)
+      Dedup.scoped(spark) {
+        inner = Dedup.persistTracked((1L to 8L).toDF("c"))
+        assert(inner.count() == 8)
+        val (innerCp, ids) =
+          newPersistentIds(Dedup.checkpointTracked((1L to 2L).toDF("d")))
+        innerCpIds = ids
+        assert(innerCp.count() == 2)
+      }
+      // the inner scope's cache and checkpoint are gone ...
+      assert(inner.storageLevel == StorageLevel.NONE)
+      assert(innerCpIds.nonEmpty &&
+        innerCpIds.forall(id => !persistentIds().contains(id)))
+      // ... and the enclosing scope's survive, the checkpoint readable
+      assert(outer.storageLevel.useMemory)
+      assert(outerCpIds.nonEmpty && outerCpIds.subsetOf(persistentIds()))
+      assert(outerCp.filter(col("b") > 1).count() == 3)
+    }
+
+    var failed: DataFrame = null
+    val e = intercept[IllegalStateException] {
+      Dedup.scoped(spark) {
+        failed = Dedup.persistTracked((1L to 3L).toDF("e"))
+        assert(failed.count() == 3)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(failed.storageLevel == StorageLevel.NONE)
+  }
+
+  private def persistentIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  // `f`'s value and the RDD ids it left persisted
+  private def newPersistentIds[T](f: => T): (T, Set[Int]) = {
+    val before = persistentIds()
+    val out = f
+    (out, persistentIds() -- before)
   }
 
   test("profile() rejects an empty column list instead of throwing in reduce") {

@@ -29,7 +29,6 @@ class LshIndexSpec extends SparkSpec {
     assert(stored.count() == direct.count())
     assert(stored.except(direct).count() == 0 &&
       direct.except(stored).count() == 0)
-    Dedup.releaseCaches()
   }
 
   test("ingest plan reads the base from the index, not the text corpus") {
@@ -42,7 +41,6 @@ class LshIndexSpec extends SparkSpec {
       s"base text re-scanned: $scans")
     assert(scans.keys.exists(_.contains("graft_lsh_index_spec")),
       s"stored index not read: $scans")
-    Dedup.releaseCaches()
   }
 
   test("index partition pruning: a single-band read scans one directory") {
@@ -72,7 +70,6 @@ class LshIndexSpec extends SparkSpec {
     val a = stored.select("qid", "cid", "rank").collect().map(_.toSeq).toSet
     val b = direct.select("qid", "cid", "rank").collect().map(_.toSeq).toSet
     assert(a == b, s"stored diverges: ${(a diff b).take(3)} / ${(b diff a).take(3)}")
-    Dedup.releaseCaches()
   }
 
   test("stored IVF query does not re-read the embeddings corpus") {
@@ -88,7 +85,6 @@ class LshIndexSpec extends SparkSpec {
       s"corpus re-scanned by the stored-index query: $scans")
     assert(scans.keys.exists(_.contains("graft_ivf_index_spec")),
       s"stored index not read: $scans")
-    Dedup.releaseCaches()
   }
 
   test("IVF index partition pruning: a single-cell read is directory-filtered") {

@@ -194,7 +194,6 @@ class OperatorSpec extends SparkSpec {
     val clean = Dedup.minhashCandidates(docs, "doc_id", "text")
     assert(capped.exceptAll(clean).count() == 0)
     assert(clean.exceptAll(capped).count() == 0)
-    Dedup.releaseCaches()
   }
 
   test("span-dup: shared spans counted, unique docs zero, copies full") {
@@ -244,7 +243,6 @@ class OperatorSpec extends SparkSpec {
         .cosineSim(col("v1"), col("v2")).as("cos"))
       .filter("cos < 0.3")
     assert(bad.count() == 0)
-    Dedup.releaseCaches()
   }
 
   test("train shards: dense 1..n positions per shard, deterministic") {
@@ -360,7 +358,6 @@ class OperatorSpec extends SparkSpec {
       .collect()
     assert(agr.map(_.getLong(2)).sum == emb.count())
     assert(agr.length <= 4)
-    Dedup.releaseCaches()
   }
 
   test("engagement rollups: cum monotone, wau dominates dau, lifts positive") {
@@ -387,7 +384,6 @@ class OperatorSpec extends SparkSpec {
       .select(explode(array(col("doc_a"), col("doc_b"))).as("id"))
       .distinct().count()
     assert(nodesInHist == paired)
-    Dedup.releaseCaches()
   }
 
   test("contamination spans agree with the count-only decontaminate") {
@@ -425,7 +421,6 @@ class OperatorSpec extends SparkSpec {
     val got = Dedup.simhashPairsExact(docs, "doc_id", "text", maxHamming = 3)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
     assert(got == truth, s"missed=${truth.diff(got).size} " +
       s"extra=${got.diff(truth).size}")
     // the single top-8-bits block provably misses a pair that differs
@@ -953,7 +948,6 @@ class OperatorSpec extends SparkSpec {
       .filter("pass").select("doc_id")
     val contaminated = TextAnalysis
       .decontaminate(corpus, bench, "doc_id", "text").select("doc_id")
-    Dedup.releaseCaches()
     assert(surv.count() > 0)
     assert(surv.select("doc_id").exceptAll(gate).count() == 0)
     assert(surv.join(contaminated, "doc_id").count() == 0)
@@ -969,7 +963,6 @@ class OperatorSpec extends SparkSpec {
       .select("doc_id")
     val clustered = CorpusPipeline.cleanClustered(docs, "doc_id", "text")
       .select("doc_id")
-    Dedup.releaseCaches()
     assert(clustered.exceptAll(pairwise).count() == 0)
     assert(clustered.count() > 0)
   }
@@ -980,7 +973,6 @@ class OperatorSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val got = Dedup.clusters(pairs, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toMap
-    Dedup.releaseCaches()
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
@@ -993,7 +985,7 @@ class OperatorSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     val conv = Dedup.clustersConverged(chain, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toMap
-    Dedup.releaseCaches()
+    Dedup.releaseAll(spark)
     assert(conv == (1L to 12L).map(_ -> 1L).toMap,
       s"fixpoint labels wrong: $conv")
     assert(fixed.values.toSet.size > 1,
@@ -1004,7 +996,6 @@ class OperatorSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     val b = Dedup.clustersConverged(blob, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toMap
-    Dedup.releaseCaches()
     assert(a == b)
   }
 
@@ -1028,7 +1019,6 @@ class OperatorSpec extends SparkSpec {
       .filter(col("j") >= 0.3)
       .select("a.doc_id", "b.doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
     assert(got.size >= 10, s"planted dups missed: ${got.size}")
     assert(got == brute)
   }
@@ -1045,7 +1035,6 @@ class OperatorSpec extends SparkSpec {
       .toDF("c_custkey", "c_name", "c_nationkey")
     assert(Linkage.linkWithinDeletes(emptyCust, "c_custkey", "c_name",
       Seq("c_nationkey")).count() == 0)
-    Dedup.releaseCaches()
   }
 
   test("cross-corpus candidates pair increment with base only") {
@@ -1053,7 +1042,6 @@ class OperatorSpec extends SparkSpec {
     val newDocs = docs.filter(col("doc_id") < 50)
     val base = docs.filter(col("doc_id") >= 50)
     val got = Dedup.crossCorpusCandidates(newDocs, base, "doc_id", "text")
-    Dedup.releaseCaches()
     val rows = got.collect()
     // every pair is (increment-side, base-side) — never base x base or
     // increment x increment
@@ -1076,7 +1064,6 @@ class OperatorSpec extends SparkSpec {
     // family makes the outcome deterministic run-to-run
     val got = Dedup.containmentPairs(corpus, "doc_id", "text",
       threshold = 0.9, bands = 12, k = 12)
-    Dedup.releaseCaches()
     val rows = got.collect()
     assert(rows.length == 1)
     val r = rows.head
@@ -1128,7 +1115,7 @@ class OperatorSpec extends SparkSpec {
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     val got = Graph.pagerank(edges, "src", "dst", rounds = 3)
       .select("id", "rank_fx").as[(Long, Long)].collect().toMap
-    Dedup.releaseCaches()
+    Dedup.releaseAll(spark)
     assert(got.size == 6)
     // hub of the star outranks its spokes; spokes are symmetric
     assert(got(1L) > got(2L))
@@ -1142,7 +1129,6 @@ class OperatorSpec extends SparkSpec {
     // determinism: a rerun is bit-identical (integer ops only)
     val again = Graph.pagerank(edges, "src", "dst", rounds = 3)
       .select("id", "rank_fx").as[(Long, Long)].collect().toMap
-    Dedup.releaseCaches()
     assert(again == got)
   }
 
@@ -1155,19 +1141,18 @@ class OperatorSpec extends SparkSpec {
     val seeds = Seq(1L).toDF("id")
     val got = Graph.bfsHops(edges, "src", "dst", seeds, "id", maxHops = 3)
       .as[(Long, Long)].collect().toMap
-    Dedup.releaseCaches()
+    Dedup.releaseAll(spark)
     assert(got == Map(1L -> 0L, 2L -> 1L, 4L -> 1L, 3L -> 2L, 5L -> 2L,
       6L -> 3L))
     // seed not in the graph: isolated at hop 0, nothing else reached
     val lone = Graph.bfsHops(edges, "src", "dst", Seq(99L).toDF("id"), "id",
       maxHops = 2).as[(Long, Long)].collect().toMap
-    Dedup.releaseCaches()
+    Dedup.releaseAll(spark)
     assert(lone == Map(99L -> 0L))
     // partition invariance: a differently-partitioned edge list yields
     // the identical label table (all-integer ops, min() is order-free)
     val again = Graph.bfsHops(edges.repartition(7), "src", "dst", seeds,
       "id", maxHops = 3).as[(Long, Long)].collect().toMap
-    Dedup.releaseCaches()
     assert(again == got)
   }
 

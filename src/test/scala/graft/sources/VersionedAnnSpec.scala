@@ -59,6 +59,5 @@ class VersionedAnnSpec extends SparkSpec {
     // metadata survives the append)
     val stats = VersionedTable.fileStats(spark, path)
     assert(stats.nonEmpty && stats.forall(_.cols.contains("cell")))
-    Dedup.releaseAll(spark)
   }
 }

@@ -135,4 +135,22 @@ class ClusterMaintainerSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L, 11L -> 1L),
       s"replayed labels diverged from the no-crash clustering: $got")
   }
+
+  test("a sink batch frees the blocks it tracked and keeps its caller's") {
+    import spark.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-cm4").toString
+    val sc = spark.sparkContext
+    val callers = Dedup.persistTracked((1L to 9L).toDF("x"))
+    assert(callers.count() == 9)
+    val before = sc.getPersistentRDDs.keySet
+    val sink = ClusterMaintainer.sink(s"$dir/labels", s"$dir/sigs",
+      "doc_id", "text")
+    sink(Seq(CmDoc(1, t1), CmDoc(2, t1b), CmDoc(10, t2)).toDF(), 0L)
+    sink(Seq(CmDoc(11, t2b), CmDoc(20, bridge)).toDF(), 1L)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(callers.storageLevel.useMemory,
+      s"a batch freed its caller's cache (batch blocks left: $left)")
+    assert(left.isEmpty, s"batch blocks left persisted: $left")
+  }
 }

@@ -290,6 +290,5 @@ class GateForgetSpec extends SparkSpec {
     snk(Seq((5L, s"$seg ${uniq(5)}")).toDF("doc_id", "text"), 3L)
     assert(VersionedTable.read(spark, outPath)
       .filter(col("doc_id") === 5L).head.getAs[Long]("n_boiler") == 1L)
-    Dedup.releaseAll(spark)
   }
 }

@@ -179,7 +179,6 @@ class RebucketSpec extends SparkSpec {
       "stale-sized prePartitioned append skipped the re-align exchange")
     assert(BucketedState.readBefore(spark, s"$statePath/vectors", 10L)
       .get.filter(col("id") === 90L).count() == 1L)
-    graft.operators.Dedup.releaseAll(spark)
   }
 
   test("a crashed first append's stale sidecar cannot survive a re-sized retry") {

@@ -310,6 +310,5 @@ class SemGateSpec extends SparkSpec {
     // owns everything after
     assert(canon(out2) ==
       (want ++ truth(all ++ b4, km(all, 3))))
-    Dedup.releaseAll(spark)
   }
 }
