@@ -1,10 +1,10 @@
 package graft.athenaeum
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.LongType
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
+
+import graft.sources.tablejson.TableJsonIO
 
 /** Engine-surfaced error: message goes to stderr, exit code 1
   * (`database.py:147-152`). */
@@ -13,62 +13,41 @@ case class EngineError(msg: String) extends RuntimeException(msg)
 /** One loaded `.table.json` table (S1: `database.py:905-996`).
   *
   * The reference builds per-column distinct sets + a reverse index at load;
-  * on Spark the cached DataFrame plus join-time hash tables are the
-  * idiomatic equivalent (SURVEY §1), so we keep only schema metadata.
-  * Column types are exactly "lit_int" (→ LongType: JSON table values are
-  * unchecked bigints even though SQL literals cap at 2^31-1) and "lit_str"
-  * (→ StringType). NULLs don't exist in the dialect → nullable=false.
+  * here `df` is the `tablejson` relation over the file, which Spark scans
+  * in place with pruned columns and pushed filters (SURVEY §1), so nothing
+  * is loaded per query beyond the header. Column types come from
+  * `df.schema`: "lit_int" for LongType (JSON table values are unchecked
+  * bigints even though SQL literals cap at 2^31-1), "lit_str" for
+  * StringType; every column is non-null (the dialect has no NULL).
   */
-final class RefTable(
-    val name: String,
-    val columnNames: Seq[String],
-    val columnTypes: Map[String, String], // name -> "lit_int" | "lit_str"
-    val df: DataFrame,
-    val rowCount: Int) {
-  def hasColumn(c: String): Boolean = columnTypes.contains(c)
-  def columnType(c: String): String = columnTypes(c)
+final class RefTable(val name: String, val df: DataFrame, val rowCount: Int) {
+  def hasColumn(c: String): Boolean = df.schema.fieldNames.contains(c)
+  def columnType(c: String): String =
+    if (df.schema(c).dataType == LongType) "lit_int" else "lit_str"
 }
 
 object Catalog {
-  private val mapper = new ObjectMapper()
 
-  /** Load `<baseDir>/<name>.table.json`; emits the reference's
-    * `- Loaded …` line via `onLoad` (W3: `database.py:990`). */
+  /** Open `<baseDir>/<name>.table.json` as a `tablejson` relation; emits
+    * the reference's `- Loaded …` line via `onLoad` (W3:
+    * `database.py:990`). */
   def loadTable(spark: SparkSession, baseDir: String, name: String,
       onLoad: String => Unit): RefTable = {
     val fileName = s"$name.table.json"
-    val path = java.nio.file.Paths.get(baseDir, fileName)
-    val text =
-      try new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-      catch { case _: java.io.IOException =>
-        throw EngineError(s"""Unable to read table "$fileName" from disk\n""")
+    val path = java.nio.file.Paths.get(baseDir, fileName).toString
+    val (root, schema) =
+      try {
+        val root = TableJsonIO.cached(path)
+        (root, TableJsonIO.schemaOf(path, root))
+      } catch {
+        case _: java.io.IOException =>
+          throw EngineError(s"""Unable to read table "$fileName" from disk\n""")
+        case e: TableJsonIO.FormatError => throw EngineError(e.getMessage)
       }
-    val root = mapper.readTree(text)
-    val header = root.get(0)
-    if (header.get(0).size != 2)
-      throw EngineError(s"""There was no header row defined for table "$name"""")
-    val cols = header.elements.asScala.map { cm =>
-      val cname = cm.get(0).asText
-      val ctype = cm.get(1).asText match {
-        case "int" => "lit_int"
-        case "str" => "lit_str"
-        case _ => throw EngineError("no column type")
-      }
-      (cname, ctype)
-    }.toSeq
-    val schema = StructType(cols.map { case (n, t) =>
-      StructField(n, if (t == "lit_int") LongType else StringType,
-        nullable = false)
-    })
-    val rows = (1 until root.size).map { i =>
-      val arr = root.get(i)
-      Row.fromSeq(cols.zipWithIndex.map { case ((_, t), j) =>
-        if (t == "lit_int") arr.get(j).asLong else arr.get(j).asText
-      })
-    }
-    onLoad(s"""- Loaded "$fileName", ${rows.size} rows.""")
-    val df = spark.createDataFrame(rows.asJava, schema)
-    new RefTable(name, cols.map(_._1), cols.toMap, df, rows.size)
+    val rowCount = root.size - 1
+    onLoad(s"""- Loaded "$fileName", $rowCount rows.""")
+    new RefTable(name,
+      spark.read.schema(schema).format("tablejson").load(path), rowCount)
   }
 
   /** `load_tables` (`database.py:192-228`): returns (allTables incl.

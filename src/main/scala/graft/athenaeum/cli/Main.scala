@@ -7,7 +7,10 @@ import graft.athenaeum._
   * ignored), table files resolved against the CWD, errors to stderr with
   * exit 1 (`write_error`, `database.py:147-152`). The session is the
   * [[graft.GraftSession]] posture over all local cores; `SPARK_MASTER`
-  * overrides the master for a deployment.
+  * overrides the master for a deployment. Under a non-local master the
+  * executors read each table at its driver-side path, so the file must
+  * be reachable at that path on every executor — the same contract as
+  * the parquet tables.
   */
 object Main {
   def main(args0: Array[String]): Unit = {

@@ -2,7 +2,7 @@ package graft.sources.tablejson
 
 import java.util
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -18,8 +18,9 @@ import scala.jdk.CollectionConverters._
 /** DataSourceV2 for the reference's `.table.json` format (SURVEY §2.1 S1:
   * a single JSON array whose first element is a header of `[name,
   * "str"|"int"]` pairs, then positional row arrays —
-  * `database.py:905-996`). Usable as
-  * `spark.read.format("tablejson").load(path)`.
+  * `database.py:905-996`), and the athenaeum's only reader of it:
+  * `Catalog` serves every table as
+  * `spark.read.schema(schema).format("tablejson").load(path)`.
   *
   * Supports column pruning (SupportsPushDownRequiredColumns): a
   * projection reaches the reader, which then materializes only the
@@ -27,48 +28,50 @@ import scala.jdk.CollectionConverters._
   * `spark.default.parallelism` slices of >=1000 rows so a single large
   * file still scans in parallel; files under 1000 rows or 1 MB get ONE
   * partition. The format is a single JSON array, so a slice cannot seek —
-  * but the parsed tree is held in a per-JVM soft-reference cache keyed by
-  * (path, length, mtime), so the file parses ONCE per JVM no matter how
-  * many slices, readers, or planning passes touch it (schema inference,
-  * partition planning, and every PartitionReader share the tree;
-  * TableJsonSourceSpec pins the parse count). Soft references let the
-  * JVM reclaim the tree under memory pressure rather than pinning it.
-  * The files the reference ships are small; at real scale this format
-  * would be converted to parquet at ingest — this source exists so
-  * reference datasets are first-class relations.
+  * the parsed tree is shared through [[TableJsonIO.cached]], so the file
+  * parses once per JVM no matter how many queries, slices, readers or
+  * planning passes touch it.
   */
 class TableJsonDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tablejson"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TableJsonIO.schemaOf(TableJsonIO.cached(options.get("path")))
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val path = options.get("path")
+    TableJsonIO.schemaOf(path, TableJsonIO.cached(path))
+  }
+
+  // a caller that already read the header passes its schema
+  override def supportsExternalMetadata(): Boolean = true
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     new TableJsonTable(properties.get("path"), schema)
 }
 
-private[sources] object TableJsonIO {
+/** The one place that knows the `.table.json` file format: the parse
+  * and the header rules, for the source and for `athenaeum.Catalog`. */
+private[graft] object TableJsonIO {
   private val mapper = new ObjectMapper()
+
+  /** A header that breaks the format's rules; the message is the
+    * reference's error text. */
+  final class FormatError(msg: String) extends IllegalArgumentException(msg)
 
   /** Number of ACTUAL file parses (cache misses) in this JVM — spec
     * instrumentation for the parse-once contract. */
   val parseCount = new java.util.concurrent.atomic.AtomicLong
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String,
-    (Long, Long, java.lang.ref.SoftReference[
-      com.fasterxml.jackson.databind.JsonNode])]
-
-  private def parse(path: String): com.fasterxml.jackson.databind.JsonNode = {
-    require(path != null, "tablejson requires a path")
-    parseCount.incrementAndGet()
-    mapper.readTree(new java.io.File(path))
-  }
+    String, (Long, Long, java.lang.ref.SoftReference[JsonNode])]
 
   /** Parse-once-per-JVM: returns the cached tree while the file's
-    * (length, mtime) is unchanged and the soft reference is live. */
-  def cached(path: String): com.fasterxml.jackson.databind.JsonNode = {
+    * (length, mtime) is unchanged and the soft reference is live (soft,
+    * so the JVM reclaims trees under memory pressure rather than pinning
+    * them). A file rewritten in place is re-read once its length or
+    * mtime moves; a rewrite to the same length inside one mtime tick of
+    * the filesystem is not seen. A missing, unreadable or non-JSON file
+    * throws an `IOException`. */
+  def cached(path: String): JsonNode = {
     require(path != null, "tablejson requires a path")
     val f = new java.io.File(path)
     val len = f.length(); val mt = f.lastModified()
@@ -77,20 +80,28 @@ private[sources] object TableJsonIO {
       val v = cur._3.get()
       if (v != null) return v
     }
-    val parsed = parse(path)
-    cache.put(path, (len, mt,
-      new java.lang.ref.SoftReference(parsed)))
+    parseCount.incrementAndGet()
+    val parsed = mapper.readTree(f)
+    cache.put(path, (len, mt, new java.lang.ref.SoftReference(parsed)))
     parsed
   }
 
-  def schemaOf(root: com.fasterxml.jackson.databind.JsonNode): StructType = {
+  /** The header as a schema: every element a `[name, type]` pair, `int`
+    * → LongType (JSON table values are unchecked bigints), `str` →
+    * StringType, every column non-null (the dialect has no NULL).
+    * Otherwise a [[FormatError]] with the reference's text
+    * (`database.py:914-925`). */
+  def schemaOf(path: String, root: JsonNode): StructType = {
+    def noHeader = new FormatError("There was no header row defined for " +
+      s"""table "${new java.io.File(path).getName.stripSuffix(".table.json")}"""")
     val header = root.get(0)
+    if (header == null || !header.isArray || header.isEmpty) throw noHeader
     StructType(header.elements.asScala.map { cm =>
+      if (!cm.isArray || cm.size != 2) throw noHeader
       val dt = cm.get(1).asText match {
         case "int" => LongType
         case "str" => StringType
-        case other => throw new IllegalArgumentException(
-          s"no column type: $other")
+        case _ => throw new FormatError("no column type")
       }
       StructField(cm.get(0).asText, dt, nullable = false)
     }.toSeq)
@@ -275,22 +286,16 @@ private[tablejson] class TableJsonReaderFactory(full: StructType,
       private var emitted = 0
       private var row: InternalRow = _
 
-      private def passes(arr: com.fasterxml.jackson.databind.JsonNode): Boolean =
-        RowFilters.passes(arr, full, filters)
-
       override def next(): Boolean = {
         if (limit >= 0 && emitted >= limit) return false
         while (i < part.end) {
           val arr = root.get(i)
           i += 1
-          if (passes(arr)) {
+          if (RowFilters.passes(arr, full, filters)) {
             val vals = new Array[Any](colIdx.length)
             var j = 0
             while (j < colIdx.length) {
-              val c = colIdx(j)
-              vals(j) =
-                if (full.fields(c).dataType == LongType) arr.get(c).asLong
-                else UTF8String.fromString(arr.get(c).asText)
+              vals(j) = RowFilters.value(arr, full, colIdx(j))
               j += 1
             }
             row = new GenericInternalRow(vals)
@@ -306,21 +311,34 @@ private[tablejson] class TableJsonReaderFactory(full: StructType,
   }
 }
 
-/** Pushed-filter evaluation over the raw JSON row: long compares for
-  * int columns, codepoint (ASCII domain) compares for str. Shared by
-  * the row reader and the aggregate reader so the two paths can never
-  * disagree on what a filter admits. */
+/** Values and pushed-filter evaluation over the raw JSON row: long
+  * compares for int columns; for str, `UTF8String` compares, which are
+  * UTF-8 byte order, i.e. code-point order — Spark's own string order
+  * (`String.compareTo` is UTF-16 order, which differs above U+FFFF).
+  * Shared by the row reader and the aggregate reader so the two paths
+  * can never disagree with each other or with Spark on what a filter
+  * admits or which value is the min. */
 private[tablejson] object RowFilters {
   import org.apache.spark.sql.sources._
-  private def cmp(arr: com.fasterxml.jackson.databind.JsonNode,
+
+  /** Column `c` of a row, as Spark holds it internally. */
+  def value(arr: JsonNode, full: StructType, c: Int): Any =
+    if (full.fields(c).dataType == LongType) arr.get(c).asLong
+    else UTF8String.fromString(arr.get(c).asText)
+
+  def compare(a: Any, b: Any): Int = (a, b) match {
+    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+    case (x: UTF8String, y: UTF8String) => x.compareTo(y)
+  }
+
+  private def cmp(arr: JsonNode,
       full: StructType, colName: String, v: Any): Int = {
     val c = full.fieldIndex(colName)
-    if (full.fields(c).dataType == LongType)
-      java.lang.Long.compare(arr.get(c).asLong,
-        v.asInstanceOf[Number].longValue)
-    else arr.get(c).asText.compareTo(v.toString)
+    compare(value(arr, full, c),
+      if (full.fields(c).dataType == LongType) v.asInstanceOf[Number].longValue
+      else UTF8String.fromString(v.toString))
   }
-  def passes(arr: com.fasterxml.jackson.databind.JsonNode,
+  def passes(arr: JsonNode,
       full: StructType, filters: Array[Filter]): Boolean =
     filters.forall {
       case EqualTo(a, v) => cmp(arr, full, a, v) == 0
@@ -345,11 +363,6 @@ private[tablejson] class TableJsonAggReader(part: TableJsonPartition,
   private val root = TableJsonIO.cached(part.path)
   private val groupIdx = agg.groups.map(full.fieldIndex)
 
-  private def value(arr: com.fasterxml.jackson.databind.JsonNode,
-      c: Int): Any =
-    if (full.fields(c).dataType == LongType) arr.get(c).asLong
-    else arr.get(c).asText
-
   private val out: Iterator[InternalRow] = {
     // group key (as a Seq for equality) -> per-func state
     val state = scala.collection.mutable.LinkedHashMap
@@ -359,7 +372,8 @@ private[tablejson] class TableJsonAggReader(part: TableJsonPartition,
       val arr = root.get(i)
       i += 1
       if (RowFilters.passes(arr, full, filters)) {
-        val key: Seq[Any] = groupIdx.map(value(arr, _)).toSeq
+        val key: Seq[Any] =
+          groupIdx.map(RowFilters.value(arr, full, _)).toSeq
         val st = state.getOrElseUpdate(key,
           new Array[Any](agg.funcs.length))
         var j = 0
@@ -368,15 +382,10 @@ private[tablejson] class TableJsonAggReader(part: TableJsonPartition,
             case ("count", _) =>
               (if (st(j) == null) 0L else st(j).asInstanceOf[Long]) + 1L
             case (fn, c) =>
-              val v = value(arr, full.fieldIndex(c))
-              if (st(j) == null) v
-              else {
-                val sign = (v, st(j)) match {
-                  case (a: Long, b: Long) => java.lang.Long.compare(a, b)
-                  case (a, b) => a.toString.compareTo(b.toString)
-                }
-                if ((fn == "min") == (sign < 0)) v else st(j)
-              }
+              val v = RowFilters.value(arr, full, full.fieldIndex(c))
+              if (st(j) == null ||
+                  (fn == "min") == (RowFilters.compare(v, st(j)) < 0)) v
+              else st(j)
           }
           j += 1
         }
@@ -391,11 +400,7 @@ private[tablejson] class TableJsonAggReader(part: TableJsonPartition,
         case _ => null: Any
       }
     state.iterator.map { case (key, st) =>
-      val vals = (key ++ st).map {
-        case s: String => UTF8String.fromString(s)
-        case other => other
-      }.toArray[Any]
-      new GenericInternalRow(vals): InternalRow
+      new GenericInternalRow((key ++ st).toArray[Any]): InternalRow
     }
   }
 

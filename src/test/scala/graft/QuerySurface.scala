@@ -29,9 +29,12 @@ object QuerySurface {
     * @param runError the error executing the query failed with, if any
     * @param drift    session state the query left changed: conf keys,
     *                 `spark.experimental` optimizations/strategies and
-    *                 persisted RDDs left after the release */
+    *                 persisted RDDs left after the release
+    * @param duplicateBlocks BlockManager "already exists on this machine"
+    *                 warnings while the query ran: two tasks raced to
+    *                 cache the same partition */
   final case class Record(audit: Either[String, Audit],
-      runError: Option[String], drift: Seq[String])
+      runError: Option[String], drift: Seq[String], duplicateBlocks: Int)
 
   private val passes = scala.collection.mutable.Map
     .empty[String, Seq[(String, Record)]]
@@ -39,14 +42,16 @@ object QuerySurface {
   /** Every query's record, sorted by query name. */
   def at(spark: SparkSession, dir: String): Seq[(String, Record)] =
     synchronized {
-      passes.getOrElseUpdate(dir,
+      passes.getOrElseUpdate(dir, DuplicateBlocks.counting {
         SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
           name -> record(spark, fn(spark, dir))
-        })
+        }
+      })
     }
 
   private def record(spark: SparkSession, build: => DataFrame): Record = {
     val before = sessionState(spark)
+    val dupsBefore = DuplicateBlocks.seen.get
     val (audit, runError) =
       try {
         val df = build
@@ -59,7 +64,41 @@ object QuerySurface {
         (audit, runError)
       } catch { case e: Throwable => (Left(e.getMessage), Some(e.getMessage)) }
       finally graft.operators.Dedup.releaseAll(spark)
-    Record(audit, runError, drift(before, sessionState(spark)))
+    Record(audit, runError, drift(before, sessionState(spark)),
+      DuplicateBlocks.seen.get - dupsBefore)
+  }
+
+  /** Counts BlockManager's duplicate-block warnings through an appender
+    * on that one logger, at WARN whatever the session's log level. */
+  private object DuplicateBlocks {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    private val logger = "org.apache.spark.storage.BlockManager"
+
+    def counting[T](body: => T): T = {
+      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      val appender = new AbstractAppender("duplicate-blocks", null, null,
+          true, Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit =
+          if (e.getMessage.getFormattedMessage
+              .contains("already exists on this machine")) seen.incrementAndGet()
+      }
+      appender.start()
+      val config = new LoggerConfig(logger, Level.WARN, false)
+      config.addAppender(appender, Level.WARN, null)
+      ctx.getConfiguration.addLogger(logger, config)
+      ctx.updateLoggers()
+      try body
+      finally {
+        ctx.getConfiguration.removeLogger(logger)
+        ctx.updateLoggers()
+        appender.stop()
+      }
+    }
   }
 
   private def auditOf(df: DataFrame): Audit = {

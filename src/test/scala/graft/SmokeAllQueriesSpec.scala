@@ -66,6 +66,14 @@ class SmokeAllQueriesSpec extends SparkSpec {
       r.runError.map(e => s"$name: $e")
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+    // reported, not asserted: with cache visibility tracking off (the
+    // Spark default) the warning marks two tasks racing to cache one
+    // partition, the loser waiting for and reading the winner's copy —
+    // no recompute, and which queries hit the race varies run to run
+    info("BlockManager duplicate-block warnings: " +
+      QuerySurface.at(spark, dir).collect {
+        case (name, r) if r.duplicateBlocks > 0 => s"$name ${r.duplicateBlocks}"
+      }.mkString(", "))
   }
 
   test("building and running a query leaves the session conf and planner hooks unchanged") {

@@ -38,6 +38,19 @@ class CatalogSpec extends SparkSpec {
     assert(err.msg == "Unable to read table \"ghost.table.json\" from disk\n")
   }
 
+  test("a table file rewritten in place is re-read") {
+    val dir = writeTable("t", """[[["n", "int"]], [1], [2]]""")
+    def rows(out: String) = out.linesIterator.drop(3).map(_.trim).toSeq.sorted
+    val first = Engine.runSql(spark, dir, "SELECT n FROM t")
+    assert(first.linesIterator.next() == "- Loaded \"t.table.json\", 2 rows.")
+    assert(rows(first) == Seq("1", "2"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "t.table.json"),
+      """[[["n", "int"]], [1], [2], [3]]""")
+    val second = Engine.runSql(spark, dir, "SELECT n FROM t")
+    assert(second.linesIterator.next() == "- Loaded \"t.table.json\", 3 rows.")
+    assert(rows(second) == Seq("1", "2", "3"))
+  }
+
   test("AdventureWorks 3-way join at 19.9k rows per side (scale smoke)") {
     def load(n: String) = spark.read.format("tablejson")
       .load(s"${AdventureWorksTables.dir}/$n.table.json")

@@ -150,6 +150,46 @@ class TableJsonSourceSpec extends SparkSpec {
       cities.collect().count(r => Set("Japan", "Canada")(r.getString(1))))
   }
 
+  private def writeTable(name: String, content: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("tj").toString
+    val path = java.nio.file.Paths.get(dir, s"$name.table.json")
+    java.nio.file.Files.writeString(path, content)
+    path.toString
+  }
+
+  test("pushed string filters and min/max follow Spark's code-point order") {
+    import org.apache.spark.sql.functions._
+    // U+1F600 is a surrogate pair in UTF-16, so String.compareTo puts it
+    // BELOW U+E000; in code points (Spark's UTF-8 byte order) it is above
+    val df = spark.read.format("tablejson").load(writeTable("emoji",
+      "[[[\"s\", \"str\"]], [\"a\"], [\"\uE000z\"], [\"\uD83D\uDE00\"]]"))
+    // the same rows as a local relation: Spark, not the scan, evaluates
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+    val pushed = df.filter(col("s") > "\uE000")
+    assert(pushed.queryExecution.executedPlan.collectLeaves().head.toString
+      .contains("GreaterThan(s,"))
+    val want = local.filter(col("s") > "\uE000").collect().map(_.getString(0))
+    assert(want.length == 2)
+    assert(pushed.collect().map(_.getString(0)).toSet == want.toSet)
+
+    val aggPushed = df.agg(min("s"), max("s"))
+    assert(aggPushed.queryExecution.executedPlan.toString
+      .contains("PushedAggregation"))
+    val aggWant = local.agg(min("s"), max("s")).collect().head
+    assert(aggWant.getString(1) == "\uD83D\uDE00")
+    assert(aggPushed.collect().head == aggWant)
+  }
+
+  test("a malformed header fails with the reference text, not an NPE") {
+    val err = intercept[IllegalArgumentException] {
+      spark.read.format("tablejson")
+        .load(writeTable("bad", """[[["name"]], ["x"]]"""))
+    }
+    assert(err.getMessage == "There was no header row defined for table \"bad\"")
+  }
+
   test("unsupported aggregates are NOT pushed and still compute correctly") {
     import org.apache.spark.sql.functions._
     val q = cities.agg(sum(col("population")).as("s"))
