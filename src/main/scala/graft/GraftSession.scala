@@ -55,7 +55,10 @@ object GraftSession {
       // from the hand-hinted increment-side builds. Join strategy is
       // therefore pinned PER JOIN with explicit hints at the call
       // sites that provably benefit (the gates already hint
-      // `shuffle_hash` on their increment sides), not session-wide.
+      // `shuffle_hash` on their increment sides), not session-wide. The
+      // athenaeum's `Executor` is another such site: it hints
+      // `shuffle_replicate_nl` on FROM instances with no `=` to another
+      // instance, so their theta joins stay one-job CartesianProducts.
       // graft_* SQL functions, optimizer rules and planner strategy: the
       // only install path (see GraftExtensions)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")

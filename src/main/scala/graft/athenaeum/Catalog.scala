@@ -15,7 +15,9 @@ case class EngineError(msg: String) extends RuntimeException(msg)
   * The reference builds per-column distinct sets + a reverse index at load;
   * here `df` is the `tablejson` relation over the file, which Spark scans
   * in place with pruned columns and pushed filters (SURVEY §1), so nothing
-  * is loaded per query beyond the header. Column types come from
+  * is loaded per query beyond the header; the scan reports the table's
+  * row count and size, so Catalyst broadcasts a small table in a join
+  * when it plans the query. Column types come from
   * `df.schema`: "lit_int" for LongType (JSON table values are unchecked
   * bigints even though SQL literals cap at 2^31-1), "lit_str" for
   * StringType; every column is non-null (the dialect has no NULL).

@@ -11,11 +11,19 @@ import Analyzer._
   * replaced by declaring the logical plan and letting Catalyst plan it
   * (SURVEY §4): we cross-join the FROM instances, apply every WHERE
   * comparison as one conjunctive filter, and project. Catalyst's
-  * PushDownPredicates + ReorderJoin rewrite that into inner hash joins
-  * with pushed filters — equivalent to (and stronger than) the
-  * reference's manual pipeline. A WHERE-less multi-table query is a real
-  * cross join here; the reference instead loops forever (J9,
-  * `database.py:663-673`) — a deliberate divergence-fix.
+  * PushDownPredicates + ReorderJoin rewrite that into inner joins with
+  * pushed filters — equivalent to (and stronger than) the reference's
+  * manual pipeline. The `tablejson` scan reports each table's size, so an
+  * equi-join against a table under `autoBroadcastJoinThreshold` is a
+  * static broadcast hash join: no shuffle, no AQE re-plan. A FROM instance
+  * with no `=` to another instance is hinted `shuffle_replicate_nl`, so
+  * its theta or cross joins stay the one-job CartesianProduct: with sizes
+  * alone they would broadcast as a BroadcastNestedLoopJoin, which costs a
+  * broadcast job and an AQE stage on tables this small. The hint follows
+  * from the query's own comparisons; no setting is involved. A WHERE-less
+  * multi-table query is a real cross join here; the reference instead
+  * loops forever (J9, `database.py:663-673`) — a deliberate
+  * divergence-fix.
   */
 object Executor {
 
@@ -30,11 +38,22 @@ object Executor {
     }.getOrElse(key)
 
   def run(all: Registry, actual: Registry, r: Resolved): DataFrame = {
-    val base = actual.map { case (key, t) => t.df.as(key) }.toSeq
-      .reduceLeft(_ crossJoin _)
+    def keyOf(rc: ResolvedCol): String = execKey(all, actual, rc.table)
+    def colOf(rc: ResolvedCol): Column = col(s"${keyOf(rc)}.${rc.column}")
 
-    def colOf(rc: ResolvedCol): Column =
-      col(s"${execKey(all, actual, rc.table)}.${rc.column}")
+    // instances with an `=` to another instance come first, so ReorderJoin
+    // sees them as one unhinted chain; the rest are hinted and joined last
+    // (a lone instance has no join for a hint to name)
+    val equiJoined = r.comparisons.flatMap {
+      case RComparison("=", RCol(a), RCol(b)) if keyOf(a) != keyOf(b) =>
+        Seq(keyOf(a), keyOf(b))
+      case _ => Nil
+    }.toSet
+    val base = actual.toSeq.sortBy(kt => !equiJoined(kt._1)).map {
+      case (key, t) =>
+        if (equiJoined(key) || actual.size == 1) t.df.as(key)
+        else t.df.as(key).hint("shuffle_replicate_nl")
+    }.reduceLeft(_ crossJoin _)
 
     def termCol(t: RTerm): Column = t match {
       case RCol(rc) => colOf(rc)

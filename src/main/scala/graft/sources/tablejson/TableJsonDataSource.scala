@@ -30,7 +30,9 @@ import scala.jdk.CollectionConverters._
   * partition. The format is a single JSON array, so a slice cannot seek —
   * the parsed tree is shared through [[TableJsonIO.cached]], so the file
   * parses once per JVM no matter how many queries, slices, readers or
-  * planning passes touch it.
+  * planning passes touch it. The scan reports its row count and an
+  * estimated size (SupportsReportStatistics), so Catalyst can plan a join
+  * against a small table as a broadcast before anything runs.
   */
 class TableJsonDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tablejson"
@@ -221,9 +223,36 @@ private[tablejson] case class PushedAgg(groups: Array[String],
 private[tablejson] class TableJsonScan(path: String, full: StructType,
     required: StructType,
     filters: Array[org.apache.spark.sql.sources.Filter],
-    limit: Int, agg: Option[PushedAgg]) extends Scan with Batch {
+    limit: Int, agg: Option[PushedAgg])
+    extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  /** The file's row count from the cached parse, and its length scaled to
+    * the columns read (Spark's own file-scan estimate: length times the
+    * read schema's default width over the full schema's); a pushed limit
+    * caps both at its share of the rows. A complete pushed aggregation
+    * emits one row when it is global, even over an empty file, and an
+    * unknown number of rows when it is grouped (the size stays a bound). */
+  override def estimateStatistics(): Statistics = {
+    val rows = (TableJsonIO.cached(path).size - 1).toLong
+    val read = if (limit >= 0) math.min(rows, limit.toLong) else rows
+    val scaled = (new java.io.File(path).length().toDouble *
+      required.defaultSize / full.defaultSize * read / math.max(rows, 1L))
+      .toLong
+    val (out, bytes) = agg match {
+      case Some(a) if a.groups.isEmpty =>
+        (Some(1L), required.defaultSize.toLong)
+      case Some(_) => (None, scaled)
+      case None => (Some(read), scaled)
+    }
+    new Statistics {
+      override def sizeInBytes(): util.OptionalLong =
+        util.OptionalLong.of(math.max(bytes, 1L))
+      override def numRows(): util.OptionalLong =
+        out.fold(util.OptionalLong.empty())(util.OptionalLong.of)
+    }
+  }
   override def description(): String =
     s"TableJsonScan ${new java.io.File(path).getName} " +
       s"PushedFilters: [${filters.mkString(", ")}], " +

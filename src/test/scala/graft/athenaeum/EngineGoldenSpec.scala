@@ -196,6 +196,76 @@ class EngineGoldenSpec extends SparkSpec {
       "ERROR: ORDER BY column \"population\" is not in the select list.")
   }
 
+  /** Small `.table.json` files for the join-plan cases: `territory` (10
+    * rows) and `a`, `b`, `c`, each `(id, v)` over ids 0..29 with values
+    * that are functions of the id. */
+  private lazy val joinDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("joins")
+    def write(name: String, header: String, rows: Seq[String]): Unit =
+      java.nio.file.Files.writeString(dir.resolve(s"$name.table.json"),
+        (header +: rows).mkString("[", ",\n", "]"))
+    write("territory", """[["territory_id", "int"], ["name", "str"]]""",
+      (1 to 10).map(i => s"""[$i, "t$i"]"""))
+    for ((t, k) <- Seq("a" -> 7, "b" -> 5, "c" -> 3))
+      write(t, """[["id", "int"], ["v", "int"]]""",
+        idsOf(t).map(i => s"[$i, ${valueOf(k, i)}]"))
+    dir.toString
+  }
+  private def idsOf(t: String): Seq[Int] =
+    if (t == "b") (0 until 30).reverse else 0 until 30
+  private def valueOf(k: Int, id: Int): Long = (id * k % 13).toLong
+
+  private def frame(sql: String): org.apache.spark.sql.DataFrame = {
+    val q = SqlParser.parse(sql)
+    val (all, actual) = Catalog.loadAll(spark, joinDir, q.from, _ => ())
+    Executor.run(all, actual, Analyzer.analyze(all, q))
+  }
+
+  /** The physical plan as first planned, before AQE runs any stage. */
+  private def initialPlan(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.execution.SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan
+      case p => p
+    }
+
+  test("theta self-join stays a CartesianProduct with no broadcast") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.CartesianProductExec
+    val df = frame("SELECT a.name, b.name AS other FROM territory AS a, " +
+      "territory AS b WHERE a.territory_id < b.territory_id")
+    val plan = initialPlan(df)
+    assert(plan.collect { case j: CartesianProductExec => j }.size == 1, plan)
+    assert(plan.collect { case e: BroadcastExchangeExec => e }.isEmpty, plan)
+    assert(df.count() == 45)
+  }
+
+  test("3-way equi chain plans only broadcast hash joins, no shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val df = frame("SELECT a.v, b.v AS bv, c.v AS cv FROM a, b, c " +
+      "WHERE a.id = b.id AND b.id = c.id")
+    val plan = initialPlan(df)
+    val joins = plan.collect { case j: BaseJoinExec => j }
+    assert(joins.size == 2 &&
+      joins.forall(_.isInstanceOf[BroadcastHashJoinExec]), plan)
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq == (0 until 30).map(i =>
+        (valueOf(7, i), valueOf(5, i), valueOf(3, i))).sorted)
+  }
+
+  test("mixed `=` and `<` across three tables returns the right rows") {
+    val df = frame("SELECT a.id, c.id AS cid FROM c, a, b " +
+      "WHERE a.id = b.id AND b.v < c.v")
+    val want = for (i <- 0 until 30; j <- 0 until 30
+        if valueOf(5, i) < valueOf(3, j)) yield (i.toLong, j.toLong)
+    assert(want.nonEmpty)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
+      want.sorted)
+  }
+
   test("reference mode still rejects ORDER as an invalid uppercase token") {
     val err = intercept[SqlParser.ParseException] {
       Engine.runSql(spark, goldenDir,

@@ -93,6 +93,45 @@ class TableJsonSourceSpec extends SparkSpec {
     assert(joined.count() == 4)
   }
 
+  test("reported statistics reach the planner: a small equi-join broadcasts up front") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val countries = spark.read.format("tablejson")
+      .load(s"$goldenDir/countries.table.json")
+    val joined = cities.as("ci").join(countries.as("co"),
+      org.apache.spark.sql.functions.col("ci.name") ===
+        org.apache.spark.sql.functions.col("co.capital"))
+    // the plan before AQE has run anything: sizes must come from the scan
+    val initial = joined.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    assert(initial.collect { case j: BroadcastHashJoinExec => j }.nonEmpty,
+      initial)
+    assert(initial.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      initial)
+
+    val full = cities.queryExecution.optimizedPlan.stats
+    assert(full.rowCount.contains(BigInt(16)), full)
+    val one = cities.select("population").queryExecution.optimizedPlan.stats
+    assert(one.sizeInBytes < full.sizeInBytes, s"$one vs $full")
+
+    // a complete pushed aggregation: one row when global, even over an
+    // empty file; an unknown count when grouped
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    import org.apache.spark.sql.functions._
+    def scanStats(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collectFirst {
+        case r: DataSourceV2ScanRelation => r.stats }.get
+    val empty = spark.read.format("tablejson").load(
+      writeTable("empty", """[[["name", "str"], ["pop", "int"]]]"""))
+    val global = scanStats(empty.agg(count(lit(1))))
+    assert(global.rowCount.contains(BigInt(1)), global)
+    val grouped = scanStats(cities.groupBy("country").agg(count(lit(1))))
+    assert(grouped.rowCount.isEmpty && grouped.sizeInBytes > 0, grouped)
+  }
+
   test("complete aggregate pushdown: global count/min/max computed in the scan") {
     import org.apache.spark.sql.functions._
     val q = cities.agg(count(lit(1)).as("n"),
