@@ -171,18 +171,6 @@ object Bench {
     * probe's size changes. */
   private[graft] val calibIoNominal = 0.35
 
-  /** Standalone calibration runner (adjudication aid): prints N probe
-    * walls so a judge can measure the host's current slowdown factor
-    * without running the bench. `runMain graft.CalibProbe [n]`. */
-  private[graft] def calibMain(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toInt).getOrElse(3)
-    (0 until n).foreach { _ =>
-      println(f"[calib] cpu ${calibrate()}%.3f s (nominal " +
-        f"$calibNominal) | io ${calibrateIo()}%.3f s (nominal " +
-        f"$calibIoNominal)")
-    }
-  }
-
   /** One query slot: wall seconds (-1 when the query threw) and the
     * [[Work]] counters BENCH_FULL.json reports. Scalars only — a kept
     * Work would hold its executed plans, and through them every shuffle
@@ -339,9 +327,4 @@ object Bench {
           head)},"errors":$errJson,"detail":"BENCH_FULL.json","sf":"$sfDir"}""")
     spark.stop()
   }
-}
-
-/** See [[Bench.calibMain]]. */
-object CalibProbe {
-  def main(args: Array[String]): Unit = Bench.calibMain(args)
 }

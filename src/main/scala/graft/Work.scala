@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The work one measured body did on a session, as exact deltas — the
-  * single per-query statistics record Bench, RunOne, the ScaleSmoke
-  * probes and the shuffle/plan specs all read.
+  * single per-query statistics record Bench, RunOne, the scale probes
+  * and the shuffle/plan specs all read.
   *
   * `plans` keeps each execution's RDDs, shuffles and broadcasts
   * reachable (so the context cleaner cannot free them): hold a Work
@@ -36,35 +36,37 @@ object Work {
     * listener bus is drained before the clock starts and again after it
     * stops, so every event of `body`'s jobs is counted (a sleep can lose
     * trailing events on a loaded host) and none of an earlier body's.
-    * Graft's tracked caches and checkpoints are released afterwards
-    * ([[graft.operators.Dedup.releaseAll]]) even when `body` throws,
-    * which then rethrows. One measuring thread per session: a
-    * concurrent query on the same session would be counted too. */
-  def measure[T](spark: SparkSession)(body: => T): (T, Work) = {
-    val sc = spark.sparkContext
-    val c = new Collector
-    GraftSqlBridge.flushListeners(sc)
-    sc.addSparkListener(c)
-    spark.listenerManager.register(c)
-    try {
-      val gc0 = gcMillis()
-      val compiles0 = compiles()
-      val t0 = System.nanoTime()
-      val out = body
-      val wallS = (System.nanoTime() - t0) / 1e9
-      val gcMs = gcMillis() - gc0
-      val compiled = compiles() - compiles0
+    * The caches and checkpoints `body` tracked are released afterwards
+    * ([[graft.operators.Dedup.scoped]]) even when `body` throws, which
+    * then rethrows; ones tracked before it, such as a cached corpus
+    * that several measured batches read, are kept. One measuring thread
+    * per session: a concurrent query on the same session would be
+    * counted too. */
+  def measure[T](spark: SparkSession)(body: => T): (T, Work) =
+    graft.operators.Dedup.scoped(spark) {
+      val sc = spark.sparkContext
+      val c = new Collector
       GraftSqlBridge.flushListeners(sc)
-      (out, c.synchronized {
-        Work(wallS, gcMs, compiled, c.jobs, c.shuffle, c.output,
-          c.plans.toVector, c.observed)
-      })
-    } finally {
-      spark.listenerManager.unregister(c)
-      sc.removeSparkListener(c)
-      graft.operators.Dedup.releaseAll(spark)
+      sc.addSparkListener(c)
+      spark.listenerManager.register(c)
+      try {
+        val gc0 = gcMillis()
+        val compiles0 = compiles()
+        val t0 = System.nanoTime()
+        val out = body
+        val wallS = (System.nanoTime() - t0) / 1e9
+        val gcMs = gcMillis() - gc0
+        val compiled = compiles() - compiles0
+        GraftSqlBridge.flushListeners(sc)
+        (out, c.synchronized {
+          Work(wallS, gcMs, compiled, c.jobs, c.shuffle, c.output,
+            c.plans.toVector, c.observed)
+        })
+      } finally {
+        spark.listenerManager.unregister(c)
+        sc.removeSparkListener(c)
+      }
     }
-  }
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._

@@ -18,7 +18,7 @@ object GateQueries {
     // at a fraction of the quadratic substring truth, which at full
     // corpus made this the bench's heaviest query. Full-corpus parity
     // stays where it belongs: SubstrGateSpec per-batch prefixes +
-    // GatePropertySpec random splits + the 30x ScaleSmoke row. The
+    // GatePropertySpec random splits + the `substr_gate` scale probe. The
     // cumulative run table must equal the one-shot batch operator over
     // the slice -----
     QuerySpec("q_substr_gate", (s, dir) => {

@@ -24,8 +24,8 @@ import graft.sources.VersionedTable
   * sort, so the batch's shuffle bill is increment-sized however much
   * state has accumulated (the round-7 layout re-shuffled the entire
   * index every batch — 13.7 GB by batch 2 on the 30× probe; the
-  * bucketed layout holds per-batch exchange flat, `SubstrGateScale`
-  * measures it). Survivors pass the exact substring-equality residual
+  * bucketed layout holds per-batch exchange flat, the `substr_gate`
+  * scale probe measures it). Survivors pass the exact substring-equality residual
   * against the pinned stored texts (bucketed by id — same
   * increment-only exchange shape) plus the batch's own, pairs orient
   * to (min id, max id), and the diagonal-runs grouping emits maximal

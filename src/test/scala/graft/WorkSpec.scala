@@ -69,6 +69,17 @@ class WorkSpec extends SparkSpec {
     assert(left.isEmpty, s"still persistent after the body: $left")
   }
 
+  test("a cache tracked before the body outlives it") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val corpus = Dedup.persistTracked(spark.range(0, 100).toDF())
+    corpus.count()
+    val kept = sc.getPersistentRDDs.keySet -- before
+    Work.measure(spark)(corpus.filter(col("id") > 50).count())
+    assert(kept.nonEmpty && kept.subsetOf(sc.getPersistentRDDs.keySet),
+      s"the body released the caller's cache: $kept")
+  }
+
   test("a throwing body still releases and rethrows") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
